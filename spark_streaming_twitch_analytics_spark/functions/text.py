@@ -698,8 +698,10 @@ def char_counts_udf():
     empty-string element for an empty text (size 1, run 1, micro term
     0), reproduced by the ``[1]`` special case; NULL text → NULL array
     (downstream folds then yield NULL, like size/aggregate over a NULL
-    split). Counting is per code point — identical to Java's UTF-16
-    units for BMP-only corpora (the testdata: verified ≤ U+00FF);
+    split). Counting is per code point, and so is Spark 4's
+    ``split(t, '')``: a supplementary-plane character (e.g. U+1D11E or
+    an emoji, two UTF-16 units) is ONE element on both sides, pinned by
+    the astral edge string in test_char_entropy_fast_matches_fold_form.
     DuckDB's string_split is also per code point."""
     from collections import Counter
 

@@ -215,6 +215,95 @@ def lsh_multiprobe_topk(
     return _topk(_scored(_pairs(q, c, ["bucket"])), k)
 
 
+def _ivf_assigned(df: DataFrame, n_cells: int, dim: int) -> DataFrame:
+    """(…, _cs, cell): argmax-cosine cell assignment against the
+    deterministic pseudo-centroids — the ONE Column definition of IVF
+    cell assignment (first max wins). :func:`_cell_rows_np` is its numpy
+    twin."""
+    from ..functions.vectors import cell_scores
+
+    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
+    return df.withColumn("_cs", s).withColumn(
+        "cell",
+        F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int"),
+    )
+
+
+def _probe_cell_cols(n_probe: int) -> list:
+    """The ONE Column definition of IVF probe selection: repeated argmax
+    over the ``_cs`` centroid-score array, masking each taken score by
+    VALUE (not position) — it mirrors cleanly into SQL, and under
+    exact-double ties both tied slots mask together, deterministically on
+    both engines. Element i is the 1-based cell id of the i-th probe.
+    When every remaining score ties (e.g. a constant embedding), repeated
+    argmax re-yields the SAME cell; :func:`_ivf_probes` dedups with
+    keep-first ``array_distinct``. :func:`_probe_rank_np` is the numpy
+    twin."""
+
+    def masked(prev):
+        # NB single-arg lambda: a two-arg lambda would be read by the HOF
+        # as (element, index)
+        return F.transform(
+            prev,
+            lambda x: F.when(x == F.array_max(prev), F.lit(-1e18)).otherwise(x),
+        )
+
+    probe_cols = []
+    cur = F.col("_cs")
+    for _ in range(n_probe):
+        probe_cols.append(F.array_position(cur, F.array_max(cur)).cast("int"))
+        cur = masked(cur)
+    return probe_cols
+
+
+def _ivf_probes(assigned_q: DataFrame, n_probe: int) -> DataFrame:
+    """Explode each :func:`_ivf_assigned` query row to its distinct
+    probed cells (:func:`_probe_cell_cols` + ``array_distinct``: without
+    the dedup a re-probed cell would join each candidate pair twice and
+    fill top-k slots twice)."""
+    return assigned_q.select(
+        "vec_id",
+        "embedding",
+        F.explode(
+            F.array_distinct(F.array(*_probe_cell_cols(n_probe)))
+        ).alias("cell"),
+    )
+
+
+def _probe_rank_np(qm, n_cells: int, n_probe: int, dim: int):
+    """Numpy twin of :func:`_probe_cell_cols` + keep-first dedup for a
+    float64 query matrix ``qm``: the (n_cells+1, nq) int32 table whose
+    entry [c, j] is the probe position (1..n_probe) at which query j
+    first reaches 1-based cell c, 0 = not probed (row 0 is unused).
+    Scores come from the bit-exact ``cell_scores_np`` fold, so the probed
+    cells match the engine expressions exactly. Probe sets are nested:
+    depth p probes exactly the cells with ``1 <= rank <= p``."""
+    import numpy as np
+
+    from ..functions.vectors import cell_scores_np
+
+    cs_q = cell_scores_np(qm, n_cells, dim)
+    rank = np.zeros((n_cells + 1, qm.shape[0]), dtype=np.int32)
+    for j in range(qm.shape[0]):
+        s = cs_q[j].copy()
+        for pos in range(1, n_probe + 1):
+            c = int(s.argmax()) + 1
+            if rank[c, j] == 0:
+                rank[c, j] = pos
+            s = np.where(s == s.max(), -1e18, s)
+    return rank
+
+
+def _cell_rows_np(cm, table, n_cells: int, dim: int):
+    """``table`` rows (indexed by 1-based cell, e.g. a
+    :func:`_probe_rank_np` table) for each candidate row of ``cm``: the
+    numpy twin of :func:`_ivf_assigned` (first-max argmax of the
+    bit-exact ``cell_scores_np``)."""
+    from ..functions.vectors import cell_scores_np
+
+    return table[cell_scores_np(cm, n_cells, dim).argmax(axis=1) + 1]
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -236,40 +325,12 @@ def ivf_topk(
     are md5-derived literals (no trained state to ship); a k-means
     refinement would only change the literals.
     """
-    from ..functions.vectors import cell_scores
-
     from .skew import fan_out
 
-    def assigned(df: DataFrame) -> DataFrame:
-        s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-        return df.withColumn("_cs", s).withColumn(
-            "cell", F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int")
-        )
-
-    c = assigned(fan_out(candidates)).select("vec_id", "embedding", "cell")
-    # query probes: repeated argmax, masking each taken cell's score by
-    # VALUE (not position) — mirrors cleanly into SQL; under exact-double
-    # ties both tied slots mask together, deterministically on both engines
-    def masked(prev):
-        # NB single-arg lambda: a two-arg lambda would be read by the HOF
-        # as (element, index)
-        return F.transform(
-            prev, lambda x: F.when(x == F.array_max(prev), F.lit(-1e18)).otherwise(x)
-        )
-
-    probe_cols = []
-    cur = F.col("_cs")
-    for _ in range(n_probe):
-        probe_cols.append(F.array_position(cur, F.array_max(cur)).cast("int"))
-        cur = masked(cur)
-    # array_distinct: when every remaining score ties (e.g. a constant
-    # embedding), repeated argmax re-probes the SAME cell — without the
-    # dedup each candidate pair joins twice and fills top-k slots twice
-    q = assigned(queries).select(
-        "vec_id",
-        "embedding",
-        F.explode(F.array_distinct(F.array(*probe_cols))).alias("cell"),
+    c = _ivf_assigned(fan_out(candidates), n_cells, dim).select(
+        "vec_id", "embedding", "cell"
     )
+    q = _ivf_probes(_ivf_assigned(queries, n_cells, dim), n_probe)
     # NO partial cut before the rank window (r12 re-measurement): Spark
     # 4's WindowGroupLimit(Partial) already bounds the exchange at k·|Q|
     # rows per partition, so the Arrow cut only saved the map-side sort
@@ -324,15 +385,9 @@ def build_ivf_index(
     corpus snapshot; queries then scan only ``n_probe/n_cells`` of the
     files (verified by the PartitionFilters plan assertion in
     ``tests/test_plans.py``)."""
-    from ..functions.vectors import cell_scores
-
-    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    assigned = candidates.withColumn("_cs", s).withColumn(
-        "cell", F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int")
-    )
-    assigned.select("vec_id", "embedding", "cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
+    _ivf_assigned(candidates, n_cells, dim).select(
+        "vec_id", "embedding", "cell"
+    ).write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
 def append_to_ivf_index(
@@ -345,15 +400,9 @@ def append_to_ivf_index(
     delta and every query batch sees the union. (Compaction of small
     appended files is an ordinary parquet-maintenance concern, orthogonal
     to correctness.)"""
-    from ..functions.vectors import cell_scores
-
-    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    assigned = new_candidates.withColumn("_cs", s).withColumn(
-        "cell", F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int")
-    )
-    assigned.select("vec_id", "embedding", "cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
+    _ivf_assigned(new_candidates, n_cells, dim).select(
+        "vec_id", "embedding", "cell"
+    ).write.mode("append").partitionBy("cell").parquet(path)
 
 
 def query_ivf_index(
@@ -372,31 +421,75 @@ def query_ivf_index(
     read touches only the probed cells' files. Scoring/top-k is then
     identical to :func:`ivf_topk` — same probes, same tie-break, same
     quantization — so results match the index-free form exactly."""
-    from ..functions.vectors import cell_scores
-
     spark = queries.sparkSession
-
-    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    q_assigned = queries.withColumn("_cs", s)
-
-    def masked(prev):
-        return F.transform(
-            prev, lambda x: F.when(x == F.array_max(prev), F.lit(-1e18)).otherwise(x)
-        )
-
-    probe_cols = []
-    cur = F.col("_cs")
-    for _ in range(n_probe):
-        probe_cols.append(F.array_position(cur, F.array_max(cur)).cast("int"))
-        cur = masked(cur)
-    q = q_assigned.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.array_distinct(F.array(*probe_cols))).alias("cell"),
-    )
+    q = _ivf_probes(_ivf_assigned(queries, n_cells, dim), n_probe)
     cells = [r["cell"] for r in q.select("cell").distinct().collect()]
     c = spark.read.parquet(path).filter(F.col("cell").isin(cells))
     return _topk(_scored(_pairs(q, c, ["cell"])), k)
+
+
+def _collect_queries(queries: DataFrame):
+    """(q_ids, qm, qn) — the query side collected to the driver as int64
+    ids, a dense float64 (nq, dim) matrix and its row norms — or None
+    when there are no queries (each caller returns its own empty
+    result). The ANN contract keeps queries the small side, the same
+    cardinality assumption as a broadcast join."""
+    import numpy as np
+
+    q_pd = queries.select("vec_id", "embedding").toPandas()
+    if len(q_pd) == 0:
+        return None
+    q_ids = q_pd["vec_id"].to_numpy(dtype=np.int64)
+    qm = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
+    qn = np.sqrt((qm * qm).sum(axis=1))
+    return q_ids, qm, qn
+
+
+def _batch_matrix(rb):
+    """Arrow batch ``embedding`` list<float> column → (n, dim) float64
+    via ONE flat-buffer reshape (``flatten()`` respects batch slicing
+    offsets) — a per-row ``np.asarray`` loop was the scorer's top cost
+    outside the matmul; the float32 → float64 upcast is exact."""
+    import numpy as np
+
+    return (
+        rb.column("embedding")
+        .flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64)
+        .reshape(rb.num_rows, -1)
+    )
+
+
+def _cos_matrix_np(cm, qm, qn):
+    """(n, nq) cosines of the rows of ``cm`` against the queries ``qm``
+    (norms ``qn``), floor-quantized to 6 dp like the Catalyst path
+    (np.round is half-even on the binary value — a different boundary
+    rule). Zero-norm pairs become NaN here and NULL on yield, matching
+    the fold path's when()-guard."""
+    import numpy as np
+
+    cn = np.sqrt((cm * cm).sum(axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.floor((cm @ qm.T) / (cn[:, None] * qn[None, :]) * 1e6) / 1e6
+
+
+def _topk_cut_np(c_ids, scores, k: int):
+    """(c_ids, scores) of one query's top-k by (score desc, NaN last,
+    c_id asc) — the engine windows' tie-break. NaN (zero-norm pair →
+    NULL downstream) must sort LAST deterministically: raw NaN
+    comparisons would make a per-batch cut depend on row order / batch
+    split. Every row tied with the k-th largest score survives the
+    partition step so the c_id tie-break sees all of them."""
+    import numpy as np
+
+    sel = np.where(np.isnan(scores), -np.inf, scores)
+    if len(c_ids) > k:
+        thr = np.partition(sel, len(sel) - k)[len(sel) - k]
+        keep = sel >= thr
+        c_ids, scores, sel = c_ids[keep], scores[keep], sel[keep]
+    order = np.lexsort((c_ids, -sel))[:k]
+    return c_ids[order], scores[order]
 
 
 def brute_force_topk_np(
@@ -408,7 +501,7 @@ def brute_force_topk_np(
     float64 matrix (the ANN contract: queries are the small side — same
     cardinality assumption as the broadcast join in
     :func:`brute_force_topk`, just materialized as numpy instead of a
-    Catalyst broadcast). Candidates stream through ``mapInPandas``: each
+    Catalyst broadcast). Candidates stream through ``mapInArrow``: each
     Arrow batch does ONE (batch × dim) @ (dim × nq) BLAS matmul and emits
     only its per-query top-k rows, so the shuffle into the final global
     top-k carries at most ``k · n_queries`` rows *per input partition* —
@@ -424,69 +517,34 @@ def brute_force_topk_np(
     import numpy as np
     import pyarrow as pa
 
-    q_pd = queries.select("vec_id", "embedding").toPandas()
-    if len(q_pd) == 0:
+    collected = _collect_queries(queries)
+    spark = queries.sparkSession
+    if collected is None:
         # empty query set: the fold path returns an empty frame; a (0,)
         # qm would crash the matmul (and np.concatenate([]) the emit)
-        spark = queries.sparkSession
         return spark.createDataFrame([], "q_id long, c_id long, cos double, rn int")
-    q_ids = q_pd["vec_id"].to_numpy(dtype=np.int64)
-    qm = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    b = queries.sparkSession.sparkContext.broadcast((q_ids, qm, qn))
+    b = spark.sparkContext.broadcast(collected)
 
     def score(batches):
         q_ids, qm, qn = b.value
-        nq = len(q_ids)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # Arrow list<float> → (n, dim) float64 via ONE flat-buffer
-            # reshape (flatten() respects batch slicing offsets) — the
-            # earlier pandas form looped a np.asarray per ROW, which was
-            # the scorer's top cost outside the matmul (guide §4.2);
-            # float32 → float64 upcast is exact either way
-            emb = rb.column("embedding")
-            cm = (
-                emb.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(rb.num_rows, -1)
-            )
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            # floor-quantize like the Catalyst path (np.round is
-            # half-even on the binary value — a different boundary rule);
-            # zero-norm pairs become NaN here and NULL on yield, matching
-            # the fold path's when()-guard
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.floor((cm @ qm.T) / (cn[:, None] * qn[None, :]) * 1e6) / 1e6
+            s = _cos_matrix_np(_batch_matrix(rb), qm, qn)
             c_ids = rb.column("vec_id").to_numpy(zero_copy_only=True)
             out_q, out_c, out_s = [], [], []
-            for j in range(nq):
+            for j in range(len(q_ids)):
                 mask = c_ids != q_ids[j]
-                cc, cs = c_ids[mask], s[:, j][mask]
-                # NaN (zero-norm pair → NULL downstream) must sort LAST
-                # deterministically — raw NaN comparisons would make the
-                # per-batch cut depend on row order / batch split
-                cs_sel = np.where(np.isnan(cs), -np.inf, cs)
-                if len(cc) > k:
-                    # keep every row tied with the k-th largest score so the
-                    # (cos desc, c_id asc) tie-break matches the exact path
-                    thr = np.partition(cs_sel, len(cs_sel) - k)[len(cs_sel) - k]
-                    keep = cs_sel >= thr
-                    cc, cs, cs_sel = cc[keep], cs[keep], cs_sel[keep]
-                order = np.lexsort((cc, -cs_sel))[:k]
-                cc, cs = cc[order], cs[order]
+                cc, cs = _topk_cut_np(c_ids[mask], s[:, j][mask], k)
                 out_q.append(np.full(len(cc), q_ids[j]))
                 out_c.append(cc)
                 out_s.append(cs)
-            cos_out = np.concatenate(out_s)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.concatenate(out_q), type=pa.int64()),
                     pa.array(np.concatenate(out_c), type=pa.int64()),
                     # NaN (zero-norm pair) → NULL, like the fold path
-                    pa.array(cos_out, type=pa.float64(), from_pandas=True),
+                    pa.array(np.concatenate(out_s), type=pa.float64(), from_pandas=True),
                 ],
                 names=["q_id", "c_id", "cos"],
             )
@@ -530,15 +588,7 @@ def _pq_encode(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # flat-buffer reshape instead of a per-row np.asarray loop
-            # (guide §4.2); float32 → float64 upcast is exact
-            V = (
-                rb.column("embedding")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(rb.num_rows, -1)
-            )
+            V = _batch_matrix(rb)
             codes = np.empty((rb.num_rows, n_sub), dtype=np.int32)
             for m in range(n_sub):
                 s = pq_scores_np(V, m, n_codes, subdim)
@@ -579,26 +629,20 @@ def _pq_query_frame(
     small DataFrame for the broadcast side of the pair join (the ANN
     contract: queries are the small side, same assumption as
     :func:`brute_force_topk_np`'s driver collect)."""
-    import numpy as np
     import pandas as pd
 
     from ..functions.vectors import pq_scores_np
 
     spark = queries.sparkSession
     subdim = dim // n_sub
-    q_pd = queries.select("vec_id", "embedding").toPandas()
+    collected = _collect_queries(queries)
     schema = "q_id long, qd array<array<double>>"
-    if len(q_pd) == 0:
+    if collected is None:
         return spark.createDataFrame([], schema)
-    V = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
+    q_ids, V, _ = collected
     tabs = [pq_scores_np(V, m, n_codes, subdim) for m in range(n_sub)]
-    qd = [[tabs[m][r].tolist() for m in range(n_sub)] for r in range(len(q_pd))]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"q_id": q_pd["vec_id"].to_numpy(dtype=np.int64), "qd": qd}
-        ),
-        schema,
-    )
+    qd = [[tabs[m][r].tolist() for m in range(n_sub)] for r in range(len(q_ids))]
+    return spark.createDataFrame(pd.DataFrame({"q_id": q_ids, "qd": qd}), schema)
 
 
 def pq_topk(
@@ -813,57 +857,6 @@ def query_sq8_index(
     return _topk(_partial_topk(_scored(pairs), k), k)
 
 
-def _ivf_assigned(df: DataFrame, n_cells: int, dim: int) -> DataFrame:
-    """(…, _cs, cell): argmax-cosine cell assignment against the
-    deterministic pseudo-centroids — the shared IVF front half."""
-    from ..functions.vectors import cell_scores
-
-    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    return df.withColumn("_cs", s).withColumn(
-        "cell",
-        F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int"),
-    )
-
-
-def _probe_cell_cols(n_probe: int) -> list:
-    """The ONE definition of IVF probe semantics (ADVICE r9 — this loop
-    used to live in both :func:`_ivf_probes` and
-    :func:`ivf_scored_pool_ranked`; a drift in one copy would silently
-    break the nested-probe equivalence the probe sweep relies on):
-    repeated argmax over the ``_cs`` centroid-score array with value
-    masking — element i is the 1-based cell id of the i-th best probe.
-    All-tied scores can re-yield a cell; callers dedup
-    (``array_distinct`` in _ivf_probes, min-rank groupBy in the ranked
-    pool) with identical keep-first semantics."""
-
-    def masked(prev):
-        return F.transform(
-            prev,
-            lambda x: F.when(x == F.array_max(prev), F.lit(-1e18)).otherwise(x),
-        )
-
-    probe_cols = []
-    cur = F.col("_cs")
-    for _ in range(n_probe):
-        probe_cols.append(F.array_position(cur, F.array_max(cur)).cast("int"))
-        cur = masked(cur)
-    return probe_cols
-
-
-def _ivf_probes(assigned_q: DataFrame, n_probe: int) -> DataFrame:
-    """Explode each query row to its top-``n_probe`` probed cells
-    (repeated argmax with value-masking + array_distinct — the exact
-    probe semantics of :func:`ivf_topk`, shared so every IVF variant
-    probes the SAME cells)."""
-    return assigned_q.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            F.array_distinct(F.array(*_probe_cell_cols(n_probe)))
-        ).alias("cell"),
-    )
-
-
 def ivf_sq8_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1000,59 +993,6 @@ def query_ivf_sq8_index(
     return _topk(_partial_topk(_scored(pairs), k), k)
 
 
-def ivf_scored_pool_ranked(
-    queries: DataFrame,
-    candidates: DataFrame,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    dim: int = DIM,
-) -> DataFrame:
-    """(q_id, c_id, cos, probe_rank): every IVF pair scored ONCE at the
-    deepest probe setting, tagged with the probe rank (1 = the query's
-    argmax cell, 2 = next, …) at which its cell was reached. Because
-    probe sets are NESTED (the first p probes of depth P ≥ p are the
-    depth-p probes), `filter(probe_rank <= p)` reproduces the exact
-    :func:`ivf_topk` pair set for any p ≤ n_probe — one corpus
-    assignment + one scoring pass serves a whole probe sweep instead of
-    one scan per setting. A re-probed cell (all-tied scores) keeps its
-    FIRST rank — the same dedup `array_distinct` does in ivf_topk."""
-    from .skew import fan_out
-
-    c = _ivf_assigned(fan_out(candidates), n_cells, dim).select(
-        F.col("vec_id").alias("c_id"),
-        as_double(F.col("embedding")).alias("cv"),
-        norm(as_double(F.col("embedding")), dim).alias("cn"),
-        "cell",
-    )
-    aq = _ivf_assigned(queries, n_cells, dim)
-    q = (
-        aq.select(
-            "vec_id",
-            "embedding",
-            F.posexplode(F.array(*_probe_cell_cols(n_probe))).alias(
-                "pos", "cell"
-            ),
-        )
-        .groupBy("vec_id", "embedding", "cell")
-        .agg((F.min("pos") + F.lit(1)).cast("int").alias("probe_rank"))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            as_double(F.col("embedding")).alias("qv"),
-            norm(as_double(F.col("embedding")), dim).alias("qn"),
-            "cell",
-            "probe_rank",
-        )
-    )
-    pairs = c.join(F.broadcast(q), ["cell"]).filter(
-        F.col("q_id") != F.col("c_id")
-    )
-    denom = F.col("qn") * F.col("cn")
-    cos = F.when(
-        denom != 0, quantize(dot(F.col("qv"), F.col("cv"), dim) / denom, 6)
-    )
-    return pairs.select("q_id", "c_id", cos.alias("cos"), "probe_rank")
-
-
 def bitext_margin_pairs(
     queries: DataFrame,
     src: DataFrame,
@@ -1137,24 +1077,68 @@ def bitext_margin_pairs(
     )
 
 
-def _ivf_probe_elig_np(qm, n_cells: int, n_probe: int, dim: int):
-    """(n_cells+1, nq) bool lookup: is 1-based cell c probed by query j?
-    Repeated argmax with value masking (ties mask together) + keep-first
-    dedup — the _probe_cell_cols semantics, same numpy twin as
-    _pq_query_frame_probed."""
+def _tagged_topk_scan(
+    candidates: DataFrame, k: int, collected, payload, rankings
+) -> DataFrame:
+    """(tag, q_id, c_id, cos, rn): several per-query top-k rankings of
+    the same candidates from ONE scan and ONE score matrix per Arrow
+    batch — the shared body of the fused recall meters and
+    the probe sweep.
+
+    ``collected`` is :func:`_collect_queries`' (q_ids, qm, qn); it and
+    ``payload`` are broadcast. Per batch, ``rankings(cm, s, qm, qn,
+    payload)`` gets the candidate matrix ``cm`` and its truth cosine
+    matrix ``s`` and returns ``[(tag, elig, score), ...]``: ``elig`` an
+    (n, nq) bool mask of the pairs that ranking may use (None = all) and
+    ``score`` the (n, nq) matrix it ranks by. Each ranking is cut to k
+    rows per (query, batch) by :func:`_topk_cut_np` — (score desc,
+    NaN→NULL last, c_id asc), the engine windows' tie-break — so every
+    emitted tag is k-bounded per (query, partition); one (tag, q_id)
+    row_number window then finalizes each ranking's exact top-k."""
     import numpy as np
+    import pyarrow as pa
 
-    from ..functions.vectors import cell_scores_np
+    b = candidates.sparkSession.sparkContext.broadcast((*collected, payload))
 
-    cs_q = cell_scores_np(qm, n_cells, dim)
-    nq = qm.shape[0]
-    elig = np.zeros((n_cells + 1, nq), dtype=bool)
-    for r in range(nq):
-        s = cs_q[r].copy()
-        for _ in range(n_probe):
-            elig[int(s.argmax()) + 1, r] = True
-            s = np.where(s == s.max(), -1e18, s)
-    return elig
+    def score_fn(batches):
+        q_ids, qm, qn, payload = b.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            cm = _batch_matrix(rb)
+            ranked = rankings(cm, _cos_matrix_np(cm, qm, qn), qm, qn, payload)
+            c_ids = rb.column("vec_id").to_numpy(zero_copy_only=True)
+            out_t, out_q, out_c, out_s = [], [], [], []
+            for j in range(len(q_ids)):
+                self_mask = c_ids != q_ids[j]
+                for tag, elig, score in ranked:
+                    mask = self_mask if elig is None else self_mask & elig[:, j]
+                    cc, cs = _topk_cut_np(c_ids[mask], score[:, j][mask], k)
+                    if len(cc) == 0:
+                        continue
+                    out_t.append(np.full(len(cc), tag, dtype=np.int32))
+                    out_q.append(np.full(len(cc), q_ids[j]))
+                    out_c.append(cc)
+                    out_s.append(cs)
+            if not out_q:
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_t), type=pa.int32()),
+                    pa.array(np.concatenate(out_q), type=pa.int64()),
+                    pa.array(np.concatenate(out_c), type=pa.int64()),
+                    pa.array(np.concatenate(out_s), type=pa.float64(), from_pandas=True),
+                ],
+                names=["tag", "q_id", "c_id", "cos"],
+            )
+
+    from .skew import fan_out
+
+    reduced = fan_out(candidates.select("vec_id", "embedding")).mapInArrow(
+        score_fn, "tag int, q_id long, c_id long, cos double"
+    )
+    w = Window.partitionBy("tag", "q_id").orderBy(F.desc("cos"), F.asc("c_id"))
+    return reduced.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def _fused_recall_meter(
@@ -1163,27 +1147,24 @@ def _fused_recall_meter(
     k: int,
     approx_prep,
     approx_batch,
-    dim: int = DIM,
 ) -> DataFrame:
     """Recall@k of an approximate ANN ranking vs brute-force truth from
-    ONE candidate scan and ONE score matrix (guide §2.4): the composed
+    ONE candidate scan and ONE score matrix (:func:`_tagged_topk_scan`:
+    tag 0 = truth, tag 1 = approx): the composed
     ``recall_at_k(brute_force_topk_np, <approx>_topk)`` meters each
     scanned the embeddings twice (matmul truth AND the approx pipeline —
     assignment/bucketing/encoding + join + fold scoring + its own
-    window) and joined two k·|Q| frames: 6-9 exchanges, 1-2 joins, 2-3
-    Python stages per meter in the r11 plans. Fused: one fan_out
-    exchange + one (side, q_id) window + one aggregate.
+    window) and joined two k·|Q| frames. Fused: one fan_out exchange +
+    one (tag, q_id) window + one aggregate.
 
-    ``approx_prep(spark, q_ids, qm, qn) -> payload`` runs driver-side
-    (may launch tiny jobs, e.g. the SQ8 stats aggregate) and its result
-    is broadcast. ``approx_batch(cm, cn, s, q_ids, qm, qn, payload) ->
-    (elig, score)`` runs per Arrow batch: ``elig`` is an (n, nq) bool
-    eligibility mask (None = all pairs eligible) and ``score`` an
-    (n, nq) approx score matrix (None = rank by the brute cosine matrix
-    ``s`` — correct for the family whose approx ranking uses the true
-    cosine within a pruned pair set: IVF / LSH). Both sides' top-k cuts
-    use (score desc, NaN→NULL last, c_id asc) — identical tie-break to
-    the engine windows.
+    ``approx_prep(qm) -> payload`` runs driver-side (may launch tiny
+    jobs, e.g. the SQ8 stats aggregate) and its result is broadcast.
+    ``approx_batch(cm, qm, qn, payload) -> (elig, score)`` runs per Arrow
+    batch: ``elig`` is an (n, nq) bool eligibility mask (None = all
+    pairs eligible) and ``score`` an (n, nq) approx score matrix (None =
+    rank by the brute cosine matrix — correct for the family whose
+    approx ranking uses the true cosine within a pruned pair set: IVF /
+    LSH).
 
     Determinism contract: eligibility/codes come from the bit-exact
     numpy fold twins (cell_scores_np / lsh_buckets_np / pq_scores_np /
@@ -1191,95 +1172,24 @@ def _fused_recall_meter(
     matmul-vs-fold-at-6dp class of :func:`brute_force_topk_np`
     (oracle-hash-verified per round); PQ/ADC approx scores are fully
     bit-exact (fixed-order 8-term fold + floor quantize)."""
-    import numpy as np
-    import pyarrow as pa
-
-    q_pd = queries.select("vec_id", "embedding").toPandas()
-    spark = queries.sparkSession
-    if len(q_pd) == 0:
+    collected = _collect_queries(queries)
+    if collected is None:
         # no queries → no truth rows: matched=0, total=0, recall NULL —
         # exactly recall_at_k's aggregate over an empty join
-        return spark.createDataFrame(
+        return queries.sparkSession.createDataFrame(
             [(0, 0, None)], "matched long, total long, recall double"
         )
-    q_ids = q_pd["vec_id"].to_numpy(dtype=np.int64)
-    qm = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    payload = approx_prep(spark, q_ids, qm, qn)
-    b = spark.sparkContext.broadcast((q_ids, qm, qn, payload))
 
-    def score_fn(batches):
-        q_ids, qm, qn, payload = b.value
-        nq = len(q_ids)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            emb = rb.column("embedding")
-            cm = (
-                emb.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(rb.num_rows, -1)
-            )
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.floor((cm @ qm.T) / (cn[:, None] * qn[None, :]) * 1e6) / 1e6
-            c_ids = rb.column("vec_id").to_numpy(zero_copy_only=True)
-            elig, approx_s = approx_batch(cm, cn, s, q_ids, qm, qn, payload)
-            out_side, out_q, out_c, out_s = [], [], [], []
-            for j in range(nq):
-                self_mask = c_ids != q_ids[j]
-                for side, mask, col in (
-                    (0, self_mask, s[:, j]),
-                    (
-                        1,
-                        self_mask if elig is None else self_mask & elig[:, j],
-                        s[:, j] if approx_s is None else approx_s[:, j],
-                    ),
-                ):
-                    cc_, cs = c_ids[mask], col[mask]
-                    if len(cc_) == 0:
-                        continue
-                    cs_sel = np.where(np.isnan(cs), -np.inf, cs)
-                    if len(cc_) > k:
-                        thr = np.partition(cs_sel, len(cs_sel) - k)[
-                            len(cs_sel) - k
-                        ]
-                        keep = cs_sel >= thr
-                        cc_, cs, cs_sel = cc_[keep], cs[keep], cs_sel[keep]
-                    order = np.lexsort((cc_, -cs_sel))[:k]
-                    cc_, cs = cc_[order], cs[order]
-                    out_side.append(np.full(len(cc_), side, dtype=np.int32))
-                    out_q.append(np.full(len(cc_), q_ids[j]))
-                    out_c.append(cc_)
-                    out_s.append(cs)
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_side), type=pa.int32()),
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_c), type=pa.int64()),
-                    pa.array(
-                        np.concatenate(out_s), type=pa.float64(), from_pandas=True
-                    ),
-                ],
-                names=["side", "q_id", "c_id", "cos"],
-            )
+    def rankings(cm, s, qm, qn, payload):
+        elig, approx_s = approx_batch(cm, qm, qn, payload)
+        return [(0, None, s), (1, elig, s if approx_s is None else approx_s)]
 
-    from .skew import fan_out
-
-    reduced = fan_out(candidates.select("vec_id", "embedding")).mapInArrow(
-        score_fn, "side int, q_id long, c_id long, cos double"
-    )
-    w = Window.partitionBy("side", "q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    top = (
-        reduced.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+    top = _tagged_topk_scan(
+        candidates, k, collected, approx_prep(collected[1]), rankings
     )
     pair_flags = top.groupBy("q_id", "c_id").agg(
-        F.max((F.col("side") == 0).cast("int")).alias("in_b"),
-        F.max((F.col("side") == 1).cast("int")).alias("in_i"),
+        F.max((F.col("tag") == 0).cast("int")).alias("in_b"),
+        F.max((F.col("tag") == 1).cast("int")).alias("in_i"),
     )
     return pair_flags.agg(
         F.coalesce(F.sum(F.col("in_b") * F.col("in_i")), F.lit(0))
@@ -1309,16 +1219,14 @@ def ivf_recall_fused(
     uses the same cosine matrix as the truth side. 7 exchanges / 2
     joins / 2 Python stages → the fused 3-exchange shape (3.99 s →
     1.22 s at sf0.1)."""
-    from ..functions.vectors import cell_scores_np
 
-    def prep(spark, q_ids, qm, qn):
-        return _ivf_probe_elig_np(qm, n_cells, n_probe, dim)
+    def prep(qm):
+        return _probe_rank_np(qm, n_cells, n_probe, dim) >= 1
 
-    def batch(cm, cn, s, q_ids, qm, qn, elig):
-        cc = cell_scores_np(cm, n_cells, dim).argmax(axis=1) + 1
-        return elig[cc], None
+    def batch(cm, qm, qn, elig):
+        return _cell_rows_np(cm, elig, n_cells, dim), None
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def lsh_recall_fused(
@@ -1334,14 +1242,14 @@ def lsh_recall_fused(
     within the bucket, like :func:`lsh_topk`."""
     from ..functions.vectors import lsh_buckets_np
 
-    def prep(spark, q_ids, qm, qn):
+    def prep(qm):
         return lsh_buckets_np(qm, n_bits, dim)
 
-    def batch(cm, cn, s, q_ids, qm, qn, qb):
+    def batch(cm, qm, qn, qb):
         cb = lsh_buckets_np(cm, n_bits, dim)
         return cb[:, None] == qb[None, :], None
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def lsh_multiprobe_recall_fused(
@@ -1358,7 +1266,7 @@ def lsh_multiprobe_recall_fused(
 
     from ..functions.vectors import lsh_buckets_np
 
-    def prep(spark, q_ids, qm, qn):
+    def prep(qm):
         qb = lsh_buckets_np(qm, n_bits, dim)
         allowed = np.zeros((1 << n_bits, len(qb)), dtype=bool)
         for j, b0 in enumerate(qb):
@@ -1367,11 +1275,11 @@ def lsh_multiprobe_recall_fused(
                 allowed[b0 ^ (1 << i), j] = True
         return allowed
 
-    def batch(cm, cn, s, q_ids, qm, qn, allowed):
+    def batch(cm, qm, qn, allowed):
         cb = lsh_buckets_np(cm, n_bits, dim)
         return allowed[cb], None
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def _pq_adc_matrix_np(cm, qm, n_sub: int, n_codes: int, dim: int):
@@ -1404,13 +1312,13 @@ def pq_recall_fused(
     """Fused recall@k of PQ/ADC: every pair eligible (flat compressed
     scan), approx ranking by the bit-exact ADC score matrix."""
 
-    def prep(spark, q_ids, qm, qn):
+    def prep(qm):
         return None
 
-    def batch(cm, cn, s, q_ids, qm, qn, payload):
+    def batch(cm, qm, qn, payload):
         return None, _pq_adc_matrix_np(cm, qm, n_sub, n_codes, dim)
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def ivfpq_recall_fused(
@@ -1425,16 +1333,30 @@ def ivfpq_recall_fused(
 ) -> DataFrame:
     """Fused recall@k of the IVF+PQ composition: IVF probe eligibility ×
     ADC approx scores — both from their bit-exact numpy twins."""
-    from ..functions.vectors import cell_scores_np
 
-    def prep(spark, q_ids, qm, qn):
-        return _ivf_probe_elig_np(qm, n_cells, n_probe, dim)
+    def prep(qm):
+        return _probe_rank_np(qm, n_cells, n_probe, dim) >= 1
 
-    def batch(cm, cn, s, q_ids, qm, qn, elig):
-        cc = cell_scores_np(cm, n_cells, dim).argmax(axis=1) + 1
-        return elig[cc], _pq_adc_matrix_np(cm, qm, n_sub, n_codes, dim)
+    def batch(cm, qm, qn, elig):
+        return (
+            _cell_rows_np(cm, elig, n_cells, dim),
+            _pq_adc_matrix_np(cm, qm, n_sub, n_codes, dim),
+        )
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
+
+
+def _sq8_stats_np(candidates: DataFrame, dim: int):
+    """(mns, mxs) float64 arrays of :func:`sq8_stats`, collected to the
+    driver (one tiny job; min/max are order-invariant, so the doubles are
+    engine-exact)."""
+    import numpy as np
+
+    row = sq8_stats(candidates, dim).collect()[0]
+    return (
+        np.array(row["mns"], dtype=np.float64),
+        np.array(row["mxs"], dtype=np.float64),
+    )
 
 
 def _sq8_score_matrix_np(cm, qm, qn, mns, mxs):
@@ -1442,14 +1364,9 @@ def _sq8_score_matrix_np(cm, qm, qn, mns, mxs):
     per dimension (sq8_requant_np — elementwise fixed-order IEEE, bit-
     identical to the Column/SQL forms), then the same floor-quantized
     cosine matrix as the truth side (matmul-vs-fold-at-6dp class)."""
-    import numpy as np
-
     from ..functions.vectors import sq8_requant_np
 
-    cv = sq8_requant_np(cm, mns, mxs)
-    cn2 = np.sqrt((cv * cv).sum(axis=1))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.floor((cv @ qm.T) / (cn2[:, None] * qn[None, :]) * 1e6) / 1e6
+    return _cos_matrix_np(sq8_requant_np(cm, mns, mxs), qm, qn)
 
 
 def sq8_recall_fused(
@@ -1458,22 +1375,15 @@ def sq8_recall_fused(
     """Fused recall@k of the SQ8 quantized scan: every pair eligible,
     approx ranking by the asymmetric cosine against requantized
     candidates. The per-dimension [min, max] stats still come from the
-    engine aggregate (one tiny driver-collected job — order-invariant,
-    so the doubles are engine-exact)."""
-    import numpy as np
+    engine aggregate."""
 
-    def prep(spark, q_ids, qm, qn):
-        row = sq8_stats(candidates, dim).collect()[0]
-        return (
-            np.array(row["mns"], dtype=np.float64),
-            np.array(row["mxs"], dtype=np.float64),
-        )
+    def prep(qm):
+        return _sq8_stats_np(candidates, dim)
 
-    def batch(cm, cn, s, q_ids, qm, qn, stats):
-        mns, mxs = stats
-        return None, _sq8_score_matrix_np(cm, qm, qn, mns, mxs)
+    def batch(cm, qm, qn, stats):
+        return None, _sq8_score_matrix_np(cm, qm, qn, *stats)
 
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def ivf_sq8_recall_fused(
@@ -1487,24 +1397,19 @@ def ivf_sq8_recall_fused(
     """Fused recall@k of the IVF+SQ8 composition: IVF probe eligibility
     (cells assigned on FULL-precision vectors, as in ivf_sq8_topk) ×
     asymmetric-SQ8 approx scores."""
-    import numpy as np
 
-    from ..functions.vectors import cell_scores_np
+    def prep(qm):
+        elig = _probe_rank_np(qm, n_cells, n_probe, dim) >= 1
+        return (elig, *_sq8_stats_np(candidates, dim))
 
-    def prep(spark, q_ids, qm, qn):
-        row = sq8_stats(candidates, dim).collect()[0]
+    def batch(cm, qm, qn, payload):
+        elig, mns, mxs = payload
         return (
-            _ivf_probe_elig_np(qm, n_cells, n_probe, dim),
-            np.array(row["mns"], dtype=np.float64),
-            np.array(row["mxs"], dtype=np.float64),
+            _cell_rows_np(cm, elig, n_cells, dim),
+            _sq8_score_matrix_np(cm, qm, qn, mns, mxs),
         )
 
-    def batch(cm, cn, s, q_ids, qm, qn, payload):
-        elig, mns, mxs = payload
-        cc = cell_scores_np(cm, n_cells, dim).argmax(axis=1) + 1
-        return elig[cc], _sq8_score_matrix_np(cm, qm, qn, mns, mxs)
-
-    return _fused_recall_meter(queries, candidates, k, prep, batch, dim)
+    return _fused_recall_meter(queries, candidates, k, prep, batch)
 
 
 def ivf_probe_sweep_fused(
@@ -1516,20 +1421,13 @@ def ivf_probe_sweep_fused(
     dim: int = DIM,
 ) -> DataFrame:
     """(n_probe, matched, total, recall) for every depth in ``probes``
-    from ONE candidate scan (guide §2.4) — the r12 continuation of the
-    r11 running-count restructure: the brute truth pass and the ranked
-    IVF pool previously scanned the embeddings separately and met in a
-    left join; here one mapInArrow emits EVERY ranking from the same
-    per-batch score matrix: depth 0 = truth partial top-k, depth p =
-    partial top-k over the pairs whose candidate cell is within the
-    query's first p probes — probe sets are NESTED, so all depths mask
-    the SAME matrix (re-probed cells keep their FIRST rank, the
-    ivf_scored_pool_ranked semantics). Every emitted depth is k-bounded
-    per (query, partition) — an earlier fused formulation shipped the
-    FULL pool through the Python boundary into a running-count window
-    and lost at ×10 (18.9 vs 12.6 s) — then one (depth, q_id)
-    row_number window finalizes each depth's exact top-k and a
-    (q_id, c_id) group + final aggregate replace the truth join.
+    from ONE candidate scan: :func:`_tagged_topk_scan` ranks tag 0 =
+    brute truth and tag p = the pairs whose candidate cell is within the
+    query's first p probes, all over the same per-batch cosine matrix.
+    Probe sets are NESTED, so one :func:`_probe_rank_np` table at the
+    deepest setting serves every depth (``1 <= rank <= p``). A
+    (q_id, c_id) group + one aggregate then count each depth's hits
+    against the truth set.
 
     Determinism: identical to :func:`ivf_recall_fused` — cells/probes
     via the bit-exact ``cell_scores_np`` twins, scores the accepted
@@ -1537,112 +1435,25 @@ def ivf_probe_sweep_fused(
     asc) unchanged; equivalence with per-depth
     recall_at_k(truth, ivf_topk) is pinned by
     tests/test_dedup_similarity.py."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..functions.vectors import cell_scores_np
-
-    max_p = max(probes)
-    q_pd = queries.select("vec_id", "embedding").toPandas()
-    spark = queries.sparkSession
-    if len(q_pd) == 0:
-        return spark.createDataFrame(
+    collected = _collect_queries(queries)
+    if collected is None:
+        return queries.sparkSession.createDataFrame(
             [(int(p), 0, 0, None) for p in probes],
             "n_probe int, matched long, total long, recall double",
         )
-    q_ids = q_pd["vec_id"].to_numpy(dtype=np.int64)
-    qm = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    nq = len(q_ids)
-    # rank_lookup[cell(1-based), j] = probe rank (1..max_p) at which
-    # query j reaches the cell, 0 = not probed; min rank on ties
-    cs_q = cell_scores_np(qm, n_cells, dim)
-    rank_lookup = np.zeros((n_cells + 1, nq), dtype=np.int32)
-    for r in range(nq):
-        s = cs_q[r].copy()
-        for pos in range(1, max_p + 1):
-            c = int(s.argmax()) + 1
-            if rank_lookup[c, r] == 0:
-                rank_lookup[c, r] = pos
-            s = np.where(s == s.max(), -1e18, s)
-    b = spark.sparkContext.broadcast((q_ids, qm, qn, rank_lookup, tuple(probes)))
 
-    def score_fn(batches):
-        q_ids, qm, qn, rank_lookup, probes_ = b.value
-        nq = len(q_ids)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            emb = rb.column("embedding")
-            cm = (
-                emb.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(rb.num_rows, -1)
-            )
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.floor((cm @ qm.T) / (cn[:, None] * qn[None, :]) * 1e6) / 1e6
-            c_ids = rb.column("vec_id").to_numpy(zero_copy_only=True)
-            cc = cell_scores_np(cm, n_cells, dim).argmax(axis=1) + 1
-            ranks = rank_lookup[cc]  # (n, nq) int32, 0 = not probed
-            out_d, out_q, out_c, out_s = [], [], [], []
-            for j in range(nq):
-                self_mask = c_ids != q_ids[j]
-                col = s[:, j]
-                rj = ranks[:, j]
-                for depth in (0,) + probes_:
-                    mask = (
-                        self_mask
-                        if depth == 0
-                        else self_mask & (rj >= 1) & (rj <= depth)
-                    )
-                    cc_, cs = c_ids[mask], col[mask]
-                    if len(cc_) == 0:
-                        continue
-                    cs_sel = np.where(np.isnan(cs), -np.inf, cs)
-                    if len(cc_) > k:
-                        thr = np.partition(cs_sel, len(cs_sel) - k)[
-                            len(cs_sel) - k
-                        ]
-                        keep = cs_sel >= thr
-                        cc_, cs, cs_sel = cc_[keep], cs[keep], cs_sel[keep]
-                    order = np.lexsort((cc_, -cs_sel))[:k]
-                    cc_, cs = cc_[order], cs[order]
-                    out_d.append(np.full(len(cc_), depth, dtype=np.int32))
-                    out_q.append(np.full(len(cc_), q_ids[j]))
-                    out_c.append(cc_)
-                    out_s.append(cs)
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_d), type=pa.int32()),
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_c), type=pa.int64()),
-                    pa.array(
-                        np.concatenate(out_s), type=pa.float64(), from_pandas=True
-                    ),
-                ],
-                names=["depth", "q_id", "c_id", "cos"],
-            )
+    def rankings(cm, s, qm, qn, rank):
+        ranks = _cell_rows_np(cm, rank, n_cells, dim)  # (n, nq), 0 = not probed
+        return [(0, None, s)] + [
+            (p, (ranks >= 1) & (ranks <= p), s) for p in probes
+        ]
 
-    from .skew import fan_out
-
-    reduced = fan_out(candidates.select("vec_id", "embedding")).mapInArrow(
-        score_fn, "depth int, q_id long, c_id long, cos double"
-    )
-    wo = Window.partitionBy("depth", "q_id").orderBy(
-        F.desc("cos"), F.asc("c_id")
-    )
-    top = (
-        reduced.withColumn("rn", F.row_number().over(wo))
-        .filter(F.col("rn") <= k)
-    )
+    rank = _probe_rank_np(collected[1], n_cells, max(probes), dim)
+    top = _tagged_topk_scan(candidates, k, collected, rank, rankings)
     pair = top.groupBy("q_id", "c_id").agg(
-        F.max((F.col("depth") == 0).cast("int")).alias("in_t"),
+        F.max((F.col("tag") == 0).cast("int")).alias("in_t"),
         *[
-            F.max((F.col("depth") == p).cast("int")).alias(f"d{p}")
+            F.max((F.col("tag") == p).cast("int")).alias(f"d{p}")
             for p in probes
         ],
     )
@@ -1751,28 +1562,18 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from ..functions.vectors import cell_scores
-
-    s = cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    ac = (
-        candidates.withColumn("_cs", s)
-        .select(
-            "vec_id",
-            as_double(F.col("embedding")).alias("v"),
-            F.array_position(F.col("_cs"), F.array_max(F.col("_cs")))
-            .cast("int")
-            .alias("cell"),
-            quantize(F.array_max(F.col("_cs")), 6).alias("centroid_score"),
-        )
+    ac = _ivf_assigned(candidates, n_cells, dim).select(
+        "vec_id",
+        as_double(F.col("embedding")).alias("v"),
+        "cell",
+        quantize(F.array_max(F.col("_cs")), 6).alias("centroid_score"),
     )
 
     def cell_losers(pdf: "pd.DataFrame") -> "pd.DataFrame":
         if len(pdf) < 2:
             return pd.DataFrame({"vec_id": np.array([], dtype=np.int64)})
         V = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        n = np.sqrt((V * V).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.floor((V @ V.T) / (n[:, None] * n[None, :]) * 1e6) / 1e6
+        cos = _cos_matrix_np(V, V, np.sqrt((V * V).sum(axis=1)))
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         cs = pdf["centroid_score"].to_numpy(dtype=np.float64)
         np.fill_diagonal(cos, -np.inf)
@@ -1811,40 +1612,32 @@ def _pq_query_frame_probed(
     dim: int,
 ) -> DataFrame:
     """(q_id, cell, qd): one row per (query, probed cell), with the ADC
-    lookup tables — the query side of :func:`ivfpq_topk`. Probe
-    selection replicates :func:`ivf_topk`'s value-masking semantics
-    exactly: repeated argmax where every score EQUAL to the current max
-    masks to -1e18 (exact-double ties mask together), duplicated cells
-    dedupe. All folds are the bit-exact numpy left-fold twins of the
-    engine expressions, so the probed cell set matches the SQL oracle's
-    to the bit. Driver-side like :func:`_pq_query_frame` — queries are
-    the small side by contract."""
+    lookup tables — the query side of :func:`ivfpq_topk`. The probed
+    cells are read from the :func:`_probe_rank_np` table in probe order,
+    so they match :func:`_ivf_probes` (and the SQL oracle) to the bit.
+    Driver-side like :func:`_pq_query_frame` — queries are the small
+    side by contract."""
     import numpy as np
     import pandas as pd
 
-    from ..functions.vectors import cell_scores_np, pq_scores_np
+    from ..functions.vectors import pq_scores_np
 
     spark = queries.sparkSession
     subdim = dim // n_sub
-    q_pd = queries.select("vec_id", "embedding").toPandas()
+    collected = _collect_queries(queries)
     schema = "q_id long, cell int, qd array<array<double>>"
-    if len(q_pd) == 0:
+    if collected is None:
         return spark.createDataFrame([], schema)
-    V = np.array([np.asarray(v, dtype=np.float64) for v in q_pd["embedding"]])
-    cs = cell_scores_np(V, n_cells, dim)
+    ids, V, _ = collected
+    rank = _probe_rank_np(V, n_cells, n_probe, dim)
     tabs = [pq_scores_np(V, m, n_codes, subdim) for m in range(n_sub)]
-    ids = q_pd["vec_id"].to_numpy(dtype=np.int64)
     rows_q, rows_cell, rows_qd = [], [], []
-    for r in range(len(q_pd)):
-        s = cs[r].copy()
-        cells = []
-        for _ in range(n_probe):
-            cells.append(int(s.argmax()) + 1)  # 1-based, first max
-            s = np.where(s == s.max(), -1e18, s)  # value-mask incl. ties
+    for r in range(len(ids)):
         qd = [tabs[m][r].tolist() for m in range(n_sub)]
-        for cell in dict.fromkeys(cells):  # dedupe, keep probe order
+        probed = np.flatnonzero(rank[:, r])
+        for cell in probed[np.argsort(rank[probed, r])]:
             rows_q.append(ids[r])
-            rows_cell.append(cell)
+            rows_cell.append(int(cell))
             rows_qd.append(qd)
     return spark.createDataFrame(
         pd.DataFrame({"q_id": rows_q, "cell": rows_cell, "qd": rows_qd}), schema
@@ -1875,16 +1668,10 @@ def ivfpq_topk(
     ``ann_ivfpq_recall`` against the exact path — quantization loss and
     probe loss measured together, per corpus.
     """
-    from ..functions.vectors import cell_scores, pq_adc_score
+    from ..functions.vectors import pq_adc_score
 
-    assigned = candidates.withColumn(
-        "_cs", cell_scores(as_double(F.col("embedding")), n_cells, dim)
-    ).withColumn(
-        "cell",
-        F.array_position(F.col("_cs"), F.array_max(F.col("_cs"))).cast("int"),
-    )
     c = _pq_encode(
-        assigned.select("vec_id", "embedding", "cell"),
+        _ivf_assigned(candidates, n_cells, dim).select("vec_id", "embedding", "cell"),
         n_sub,
         n_codes,
         dim,

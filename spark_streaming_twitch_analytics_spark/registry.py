@@ -4784,31 +4784,15 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     index and the same exact truth set — the tuning table for the
     scan-cost/recall trade.
 
-    Round-9 restructure: probe sets are NESTED, so the corpus is
-    assigned and scored ONCE at the deepest setting with each pair
-    tagged by the probe rank that reached its cell
-    (``similarity.ivf_scored_pool_ranked``); each sweep point is then a
-    filter + top-k over the pool instead of its own full IVF scan — one
-    scoring pass of 4/8 of the pairs replaces three passes totalling 7/8
-    (measured 8.2 s → ~5.0 s at sf0.1).
-
-    Round-11 restructure: the three per-point top-k windows + three
-    truth joins + six aggregates collapse into ONE window pass and ONE
-    join. Within the per-query total order (cos desc NULLS LAST, c_id
-    asc), the depth-p rank of a pair is the RUNNING COUNT of rows with
-    probe_rank <= p — probe sets are nested, so one sorted pass yields
-    every depth's exact row_number simultaneously; depth-p membership is
-    then (probe_rank <= p AND rn_p <= k), checked per truth row after a
-    single left join. 3 exchanges + 3 joins → 1 + 1 (measured ~4.5 →
-    ~2.3 s at sf0.1).
-
-    Round-12 restructure: the truth scan and the ranked pool fuse into
-    ONE candidate scan (similarity.ivf_probe_sweep_fused — same
-    side-tagged one-scan shape as the fused recall meters), and the
-    truth join becomes a (q_id, c_id) group over the side-union. 2
-    scans + 1 join → 1 scan + 0 joins; equivalence with per-depth
-    recall_at_k(truth, ivf_topk) is test-pinned and the unchanged
-    oracle hash-checks it."""
+    One candidate scan serves every depth: probe sets are NESTED, so
+    ``similarity.ivf_probe_sweep_fused`` ranks the exact truth and each
+    depth's IVF pair set (the candidates whose cell is within the
+    query's first p probes) from the same per-batch score matrix in one
+    ``mapInArrow`` stage, finalizes each ranking with one (tag, q_id)
+    top-k window, and counts hits per depth with a (q_id, c_id) group
+    and one aggregate — no join. Equivalence with per-depth
+    recall_at_k(truth, ivf_topk) is test-pinned and hash-checked by the
+    oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     return similarity.ivf_probe_sweep_fused(

@@ -673,36 +673,6 @@ def test_bitext_margin_suppresses_hub_that_wins_raw_cosine(spark):
     assert by_rank[1]["margin"] > by_rank[2]["margin"]
 
 
-def test_ivf_scored_pool_ranked_reproduces_every_probe_depth(spark):
-    """The probe-sweep restructure's load-bearing claim: filtering the
-    ranked max-depth pool to probe_rank <= p and re-ranking must equal
-    ivf_topk at n_probe=p EXACTLY, for every p (nested probe sets,
-    identical scores and tie-breaks)."""
-    from pyspark.sql import functions as F
-
-    from spark_streaming_twitch_analytics_spark.operators import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 10 == 0)
-    pool = similarity.ivf_scored_pool_ranked(
-        queries, emb, n_cells=8, n_probe=4
-    ).persist()
-    try:
-        for p in (1, 2, 4):
-            via_pool = similarity._topk(
-                pool.filter(F.col("probe_rank") <= p).select(
-                    "q_id", "c_id", "cos"
-                ),
-                5,
-            )
-            direct = similarity.ivf_topk(queries, emb, 5, n_cells=8, n_probe=p)
-            assert sorted(map(tuple, via_pool.collect())) == sorted(
-                map(tuple, direct.collect())
-            ), f"probe depth {p} diverged"
-    finally:
-        pool.unpersist()
-
-
 def test_ivf_recall_fused_matches_composed_form(spark):
     """r12 restructure guard: the one-scan fused recall meter must equal
     the composed recall_at_k(brute_force_topk_np, ivf_topk) row-for-row

@@ -212,29 +212,57 @@ vec_component = st.integers(min_value=-1000, max_value=1000)
 
 
 @settings(max_examples=5, deadline=None)
-@given(vecs=st.lists(st.tuples(*[vec_component] * 8), min_size=2, max_size=30))
+@given(
+    vecs=st.lists(
+        st.one_of(st.just((0,) * 7), st.tuples(*[vec_component] * 7)),
+        min_size=2,
+        max_size=30,
+    )
+)
 def test_vector_fold_functions_match_duckdb_bitwise(spark, vecs):
     """cosine / LSH bucket / IVF cell on arbitrary int-valued float
     vectors must be BIT-identical across engines (the identical-order
     fold property every ANN/dedup oracle hash rests on). Components are
     int-valued floats (exactly representable) but the intermediate
-    products/sums exercise real float accumulation order."""
+    products/sums exercise real float accumulation order.
+
+    The numpy twins the fused ANN meters rank with are pinned against
+    the Column forms on the same rows: cell_scores_np, lsh_buckets_np,
+    sq8_requant_np, and the probe-rank table vs
+    ``array_distinct(_probe_cell_cols)`` in probe order. Every example
+    carries an all-zero vector (every cell score ties, so repeated
+    argmax re-probes the same cell, and every LSH dot sits exactly at
+    the sign threshold) and a duplicated row; the last dimension is
+    constant (0) so SQ8's ``rng == 0`` branch is hit."""
     import duckdb
+    import numpy as np
 
     from spark_streaming_twitch_analytics_spark.functions import vectors as V
+    from spark_streaming_twitch_analytics_spark.operators import similarity as S
 
-    dim = 8
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    dim, n_cells, n_probe = 8, 4, 3
+    vecs = list(vecs) + [(0,) * 7, vecs[-1]]
+    rows = [(i, [float(x) for x in v] + [0.0]) for i, v in enumerate(vecs)]
     q = rows[0][1]  # fixed query vector for the pairwise cosine
+    M = np.array([v for _, v in rows])
+    mns, mxs = M.min(axis=0), M.max(axis=0)
     df = spark.createDataFrame(rows, "vid long, v array<double>")
     qcol = F.array(*[F.lit(x) for x in q])
     got = [
         tuple(r)
-        for r in df.select(
+        for r in df.withColumn("_cs", V.cell_scores(F.col("v"), n_cells, dim))
+        .select(
             "vid",
             V.cosine(F.col("v"), qcol, dim=dim).alias("cos"),
             V.lsh_bucket(F.col("v"), 4, dim).alias("bkt"),
-            V.cell_scores(F.col("v"), 4, dim).alias("cells"),
+            F.col("_cs").alias("cells"),
+            V.sq8_requant(
+                F.col("v"),
+                F.array(*[F.lit(float(x)) for x in mns]),
+                F.array(*[F.lit(float(x)) for x in mxs]),
+                dim,
+            ).alias("sq8"),
+            F.array_distinct(F.array(*S._probe_cell_cols(n_probe))).alias("probes"),
         )
         .orderBy("vid")
         .collect()
@@ -245,7 +273,7 @@ def test_vector_fold_functions_match_duckdb_bitwise(spark, vecs):
     qsql = "[" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in q) + "]"
     want = con.execute(
         f"""SELECT vid, {V.cosine_sql('v', qsql, dim)},
-        {V.lsh_bucket_sql('v', 4, dim)}, {V.cell_scores_sql('v', 4, dim)}
+        {V.lsh_bucket_sql('v', 4, dim)}, {V.cell_scores_sql('v', n_cells, dim)}
         FROM t ORDER BY vid"""
     ).fetchall()
     for g, w in zip(got, want):
@@ -253,6 +281,17 @@ def test_vector_fold_functions_match_duckdb_bitwise(spark, vecs):
         assert repr(g[1]) == repr(w[1]), (g[0], "cosine", g[1], w[1])
         assert g[2] == w[2], (g[0], "lsh bucket")
         assert [repr(x) for x in g[3]] == [repr(x) for x in w[3]], (g[0], "cells")
+
+    cells_np = V.cell_scores_np(M, n_cells, dim)
+    buckets_np = V.lsh_buckets_np(M, 4, dim)
+    sq8_np = V.sq8_requant_np(M, mns, mxs)
+    rank = S._probe_rank_np(M, n_cells, n_probe, dim)
+    for j, g in enumerate(got):
+        assert [repr(x) for x in cells_np[j]] == [repr(x) for x in g[3]], (j, "cells_np")
+        assert buckets_np[j] == g[2], (j, "lsh_buckets_np")
+        assert [repr(x) for x in sq8_np[j]] == [repr(x) for x in g[4]], (j, "sq8_np")
+        probed = np.flatnonzero(rank[:, j])
+        assert list(probed[np.argsort(rank[probed, j])]) == list(g[5]), (j, "probes")
 
 
 ts_small = st.integers(min_value=0, max_value=30)

@@ -313,9 +313,10 @@ def test_char_entropy_fast_matches_fold_form(spark, docs):
     """r12 rewrite guard: the Arrow-batched Counter + JVM micro-term
     fold (char_counts_udf + char_entropy_parts_fast) must produce the
     SAME (n, micro) integers as the per-character HOF fold — on real
-    docs and on the edge strings (empty text, single char, all-same)."""
+    docs and on the edge strings (empty text, single char, all-same, and
+    supplementary-plane characters, which are two UTF-16 units each)."""
     sample = [r["text"] for r in docs.limit(40).collect()] + [
-        "", "a", "aaaa", "ab", "abcd", "aabéé",
+        "", "a", "aaaa", "ab", "abcd", "aabéé", "a\U0001D11Eb😀😀",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(sample)], "doc_id long, text string"
