@@ -33,6 +33,7 @@ from ..constants import (
     sql_str_array,
     sql_str_list,
 )
+from . import lit_array
 
 TOKEN_PATTERN = r"\s+"
 
@@ -52,7 +53,7 @@ def tokenize_sql(expr: str) -> str:
 
 
 def stopword_array(lang: str) -> Column:
-    return F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    return lit_array(STOPWORDS[lang])
 
 
 def remove_stopwords(tokens: Column, lang: str) -> Column:
@@ -395,7 +396,7 @@ def lang_scores(tokens: Column) -> dict[str, Column]:
     """Marker-hit counts per language (distinct markers present)."""
     out = {}
     for lang in LANG_ORDER:
-        markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
+        markers = lit_array(LANG_MARKERS[lang])
         out[lang] = F.size(F.array_intersect(F.array_distinct(tokens), markers))
     return out
 
@@ -549,8 +550,8 @@ def sentiment_score(tokens: Column) -> Column:
     """Lexicon sentiment in [-1,1]: (pos-hits − neg-hits)/token-count,
     rounded to 4 decimals. Implements the reference's declared-but-unwired
     sentiment surface (``pipelines.scala:10-40``) without Spark NLP."""
-    pos = F.array(*[F.lit(w) for w in SENTIMENT_POSITIVE])
-    neg = F.array(*[F.lit(w) for w in SENTIMENT_NEGATIVE])
+    pos = lit_array(SENTIMENT_POSITIVE)
+    neg = lit_array(SENTIMENT_NEGATIVE)
     n_pos = F.size(F.filter(tokens, lambda t: F.array_contains(pos, t)))
     n_neg = F.size(F.filter(tokens, lambda t: F.array_contains(neg, t)))
     return F.round((n_pos - n_neg) / F.greatest(F.size(tokens), F.lit(1)), 4)

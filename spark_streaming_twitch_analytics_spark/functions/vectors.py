@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import lit_array
+
 
 def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
@@ -111,11 +113,7 @@ def cell_scores(vec: Column, n_cells: int, dim: int) -> Column:
     engines agree bit-for-bit."""
     return F.array(
         *[
-            dot(
-                vec,
-                F.array(*[F.lit(float(x)) for x in centroid_weights(c, dim)]),
-                dim,
-            )
+            dot(vec, lit_array([float(x) for x in centroid_weights(c, dim)]), dim)
             for c in range(n_cells)
         ]
     )
@@ -322,7 +320,7 @@ def int_dot(a: Column, weights: list[int]) -> Column:
     """Exact integer dot product of an ``array<bigint>`` column against a
     literal integer weight vector — BIGINT accumulation, so the sum is
     order-invariant and engine-exact (no float fold anywhere)."""
-    w = F.array(*[F.lit(int(x)) for x in weights])
+    w = lit_array([int(x) for x in weights])
     prods = F.zip_with(a, w, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
@@ -419,7 +417,7 @@ def lsh_bucket(vec: Column, n_bits: int, dim: int) -> Column:
     """Sign-of-dot-product LSH bucket id in [0, 2^n_bits)."""
     acc = F.lit(0)
     for h in range(n_bits):
-        w = F.array(*[F.lit(float(x)) for x in hyperplane_weights(h, dim)])
+        w = lit_array([float(x) for x in hyperplane_weights(h, dim)])
         acc = acc + F.when(dot(vec, w, dim) > 0, F.lit(1 << h)).otherwise(F.lit(0))
     return acc
 

@@ -29,6 +29,7 @@ from ..constants import (
     OUTLIER_LABELS,
     sql_str_list,
 )
+from ..functions import lit_array
 from ..functions.text import clean_disc, clean_disc_sql, strip_listchars, strip_listchars_sql
 
 
@@ -43,7 +44,7 @@ def prepare_training_data(
     cat_string = F.concat(
         F.lit('["'), F.col("source"), F.lit("', '"), F.col("lang"), F.lit('"]')
     )
-    outlier_arr = F.array(*[F.lit(x) for x in outliers])
+    outlier_arr = lit_array(outliers)
     base = (
         docs.na.drop(subset=["text", "source", "lang"])
         .withColumn("text", F.trim(clean_disc(F.col("text"))))
@@ -90,7 +91,7 @@ def prepare_training_worksheet(
     (``ProcessingWorkSheet.sc:113-114``) — top-K is bounded (≤ ``top_k``
     rows) so this is safe at any corpus size; ``prepare_training_data``
     shows the pure semi-join alternative."""
-    outlier_arr = F.array(*[F.lit(x) for x in outliers])
+    outlier_arr = lit_array(outliers)
     base = (
         csv_df.na.drop()
         .select(
@@ -113,7 +114,7 @@ def prepare_training_worksheet(
             .collect()
         )
     ]
-    keep_arr = F.array(*[F.lit(x) for x in top_labels]) if top_labels else F.array()
+    keep_arr = lit_array(top_labels)
     return (
         base.withColumn("label", F.array_intersect("label", keep_arr))
         .filter(F.size("label") > 0)

@@ -29,7 +29,7 @@ from .constants import (
     sql_str_array,
     sql_str_list,
 )
-from .functions import scoring
+from .functions import lit_array, scoring
 from .functions import text as X
 from .functions import vectors as V
 from .operators import (
@@ -319,7 +319,7 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     left order, DuckDB doesn't guarantee one)."""
     d = _docs(spark, sf_dir)
     toks = F.array_distinct(X.tokenize(F.col("text")))
-    outliers = F.array(*[F.lit(x) for x in OUTLIER_LABELS])
+    outliers = lit_array(OUTLIER_LABELS)
     stops = X.stopword_array(DEFAULT_LANG)
     return d.select(
         "doc_id",
@@ -2452,9 +2452,7 @@ def retrieval_ndcg_meter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn",
         F.coalesce(F.lit(_NDCG_K + 1) - F.col("irn"), F.lit(0)).alias("gain"),
     )
-    disc = F.element_at(
-        F.array(*[F.lit(int(n)) for n in _NDCG_DISC_NUM]), F.col("rn")
-    )
+    disc = F.element_at(lit_array([int(n) for n in _NDCG_DISC_NUM]), F.col("rn"))
     dcg_num = F.sum(F.col("gain") * disc)
     return gains.groupBy("q_id").agg(
         F.sum((F.col("gain") > 0).cast("int")).cast("int").alias("n_hits"),

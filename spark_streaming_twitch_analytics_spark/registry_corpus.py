@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .constants import DEFAULT_LANG, sql_str_array
+from .functions import lit_array
 from .functions import text as X
 from .functions import vectors as V
 from .functions import scoring as _SCORING
@@ -3076,7 +3077,7 @@ def corpus_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the 100 TB corpus reduces map-side with zero shuffles."""
     d = _docs(spark, sf_dir)
     labels = _SCORING.decode_categories(_SCORING.hash_scores(F.col("text")))
-    targets = F.array(*[F.lit(c) for c in _CLF_TARGETS])
+    targets = lit_array(_CLF_TARGETS)
     # bind the decoded label array ONCE via a single-element transform
     # (scoring.py's documented trick — Catalyst does not CSE across the
     # three consumers, so inlining `labels` per column would score every

@@ -27,6 +27,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import lit_array
+
 RAW_SCHEMA = "value string"
 
 
@@ -71,7 +73,7 @@ def rate_source_lines(
     filler the word filter drops — so the downstream word counts are
     non-trivial, as on a real channel."""
     user = F.concat(F.lit("u"), (F.col("value") % 7).cast("string"))
-    words = F.array(*[F.lit(w) for w in _RATE_WORDS])
+    words = lit_array(_RATE_WORDS)
     w1 = F.element_at(words, (F.col("value") % len(_RATE_WORDS) + 1).cast("int"))
     w2 = F.element_at(words, (F.col("value") % 5 + 1).cast("int"))
     line = F.concat(

@@ -1,8 +1,15 @@
 """Testdata star-schema loaders.
 
 One parquet file per table under a scale-factor directory (see
-``TESTDATA.md``). Loading stays lazy -- a plain ``spark.read.parquet``
-so Catalyst can push filters and prune columns into the scan.
+``TESTDATA.md``). Loading stays lazy, so Catalyst can push filters and
+prune columns into the scan, and reads with a supplied schema: inferring
+one costs a Spark job per open (the parquet footer read), which is most
+of the open time. The inferred schema is cached in this module per
+file, valid for the file's ``(path, st_mtime_ns, st_size)``: the first
+open of a file infers it, later opens reuse it, and a rewritten file is
+inferred again. The key does not cover the session confs that shape
+inference (``ensure_session_conf`` pins the one the tables need,
+nanosAsLong).
 """
 
 from __future__ import annotations
@@ -10,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -25,6 +33,9 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# path → (st_mtime_ns, st_size, inferred schema); one entry per file
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
 
 
 def ensure_session_conf(spark: SparkSession) -> None:
@@ -53,7 +64,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key, stamp = os.path.abspath(path), (st.st_mtime_ns, st.st_size)
+    cached = _SCHEMAS.get(key)
+    if cached is None or cached[:2] != stamp:
+        cached = _SCHEMAS[key] = (*stamp, spark.read.parquet(path).schema)
+    df = spark.read.schema(cached[2]).parquet(path)
     from pyspark.sql import functions as F
 
     for col, dtype in df.dtypes:

@@ -208,7 +208,14 @@ def test_portable_scalar_text_functions_match_duckdb(spark, texts):
                 assert gv == wv, (g[0], lbl, gv, wv)
 
 
-vec_component = st.integers(min_value=-1000, max_value=1000)
+# int-valued components plus huge and tiny magnitudes. Huge stops at
+# 1e12: PQ/ADC scores are floor-quantized at 1e6 and Spark's floor
+# returns a saturating bigint, so |score|·1e6 must stay below 2^63 (and
+# IVF cell scores below the -1e18 probe mask)
+vec_component = st.one_of(
+    st.integers(min_value=-1000, max_value=1000),
+    st.sampled_from([1e12, -1e12, 1e-300, -1e-300, 5e-324]),
+)
 
 
 @settings(max_examples=5, deadline=None)
@@ -220,16 +227,20 @@ vec_component = st.integers(min_value=-1000, max_value=1000)
     )
 )
 def test_vector_fold_functions_match_duckdb_bitwise(spark, vecs):
-    """cosine / LSH bucket / IVF cell on arbitrary int-valued float
-    vectors must be BIT-identical across engines (the identical-order
-    fold property every ANN/dedup oracle hash rests on). Components are
-    int-valued floats (exactly representable) but the intermediate
+    """cosine / LSH bucket / IVF cell on arbitrary float vectors must be
+    BIT-identical across engines (the identical-order fold property every
+    ANN/dedup oracle hash rests on). Components are int-valued floats or
+    huge / tiny (subnormal included) magnitudes; the intermediate
     products/sums exercise real float accumulation order.
 
     The numpy twins the fused ANN meters rank with are pinned against
     the Column forms on the same rows: cell_scores_np, lsh_buckets_np,
     sq8_requant_np, and the probe-rank table vs
-    ``array_distinct(_probe_cell_cols)`` in probe order. Every example
+    ``array_distinct(_probe_cell_cols)`` in probe order. The PQ twins are
+    pinned against the SQL twin and the ADC Column: pq_scores_np against
+    pq_dtabs_sql, its first argmax against pq_codes_sql, and
+    _pq_adc_matrix_np against quantize(pq_adc_score) and
+    pq_adc_score_sql over every (candidate, query) pair. Every example
     carries an all-zero vector (every cell score ties, so repeated
     argmax re-probes the same cell, and every LSH dot sits exactly at
     the sign threshold) and a duplicated row; the last dimension is
@@ -292,6 +303,37 @@ def test_vector_fold_functions_match_duckdb_bitwise(spark, vecs):
         assert [repr(x) for x in sq8_np[j]] == [repr(x) for x in g[4]], (j, "sq8_np")
         probed = np.flatnonzero(rank[:, j])
         assert list(probed[np.argsort(rank[probed, j])]) == list(g[5]), (j, "probes")
+
+    n_sub, n_codes = 4, 4  # ≥ 3 subspaces: the ADC sum's order shows
+    subdim = dim // n_sub
+    pq = con.execute(
+        f"""SELECT vid, {V.pq_dtabs_sql('v', n_sub, n_codes, dim)} AS d,
+        {V.pq_codes_sql('v', n_sub, n_codes, dim)} AS c FROM t ORDER BY vid"""
+    ).fetchall()
+    for m in range(n_sub):
+        scores_np = V.pq_scores_np(M, m, n_codes, subdim)
+        for j, (_, d, c) in enumerate(pq):
+            assert [repr(x) for x in scores_np[j]] == [repr(x) for x in d[m]], (j, m, "pq_scores_np")
+            assert scores_np[j].argmax() + 1 == c[m], (j, m, "pq code")
+    adc_np = S._pq_adc_matrix_np(M, M, n_sub, n_codes, dim)  # [candidate, query]
+    con.execute("CREATE TABLE pq(vid BIGINT, d DOUBLE[][], c INT[])")
+    con.executemany("INSERT INTO pq VALUES (?, ?, ?)", pq)
+    adc_sql = con.execute(
+        f"""SELECT c.vid, q.vid,
+        {V.quantize_sql(V.pq_adc_score_sql('q.d', 'c.c', n_sub), 6)}
+        FROM pq c, pq q"""
+    ).fetchall()
+    pairs = spark.createDataFrame(
+        [(c[0], q_[0], q_[1], c[2]) for c in pq for q_ in pq],
+        "c_vid long, q_vid long, d array<array<double>>, c array<int>",
+    )
+    adc_col = pairs.select(
+        "c_vid", "q_vid", V.quantize(V.pq_adc_score(F.col("d"), F.col("c"), n_sub), 6)
+    ).collect()
+    assert len(adc_sql) == len(adc_col) == len(rows) ** 2
+    for engine, out in (("sql", adc_sql), ("column", adc_col)):
+        for c, q_, x in out:
+            assert repr(adc_np[c, q_]) == repr(x), (c, q_, engine, "_pq_adc_matrix_np")
 
 
 ts_small = st.integers(min_value=0, max_value=30)

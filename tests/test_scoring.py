@@ -12,12 +12,41 @@ from spark_streaming_twitch_analytics_spark.functions import scoring
 
 def test_hash_scorer_udf_matches_native_expression(spark, docs):
     udf = scoring.score_udf(scoring.HashScorer())
-    both = docs.limit(50).select(
+    edge = spark.createDataFrame(
+        [("",), ("a\U0001D11Eb😀😀",), ("user!u@tmi PRIVMSG #c :hi: there",)],
+        "text string",
+    )
+    both = docs.limit(50).select("text").unionByName(edge).select(
+        "text",
         udf(F.col("text")).alias("via_udf"),
         scoring.hash_scores(F.col("text")).alias("native"),
     )
-    for r in both.collect():
-        assert r["via_udf"] == r["native"]  # bit-identical (k/15 doubles)
+    rows = both.collect()
+    assert {"", "a\U0001D11Eb😀😀"} <= {r["text"] for r in rows}
+    for r in rows:
+        # bit-identical (k/15 doubles)
+        assert [repr(x) for x in r["via_udf"]] == [repr(x) for x in r["native"]], r["text"]
+
+
+def test_score_decode_column_builds_in_few_jvm_calls(spark):
+    """Building the threshold-decode Column must not grow with the number
+    of classes: one score expression and one literal per class would
+    cost ~4,600 Py4J round trips. The count is deterministic for a given
+    PySpark version."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        scoring.decode_categories(scoring.hash_scores(F.col("text")))
+    finally:
+        del client.send_command  # back to the class's method
+    assert 0 < calls[0] <= 300, calls[0]
 
 
 def test_scores_shape_and_range(spark, docs):
