@@ -30,6 +30,35 @@ from pyspark.sql import functions as F
 BENCH_REPLICATE = 20
 BENCH_N_FILES = 10
 
+# per-trigger ``durationMs`` phases kept from each run's recentProgress
+PHASES = ("addBatch", "walCommit", "commitOffsets", "latestOffset", "queryPlanning")
+
+
+def _median(vals: list):
+    return sorted(vals)[len(vals) // 2] if vals else None
+
+
+def _phase_medians(progress: list[dict]) -> dict:
+    """Per-phase median over a run's data-carrying micro-batches: each
+    ``durationMs`` phase in :data:`PHASES`, plus ``stateCommit`` (the
+    stateful operators' ``commitTimeMs``, summed per batch). A phase no
+    batch reported reads None."""
+    batches = [p for p in progress if p.get("numInputRows", 0) > 0]
+    out = {
+        ph: _median(
+            [p["durationMs"][ph] for p in batches if ph in p["durationMs"]]
+        )
+        for ph in PHASES
+    }
+    out["stateCommit"] = _median(
+        [
+            sum(op.get("commitTimeMs", 0) for op in p["stateOperators"])
+            for p in batches
+            if p.get("stateOperators")
+        ]
+    )
+    return out
+
 
 def measure_stream_throughput(
     spark: SparkSession,
@@ -40,9 +69,12 @@ def measure_stream_throughput(
 ) -> dict:
     """Run the complete flagship stream over a replicated corpus and
     return ``{"lines", "files", "wall_sec", "wall_sec_runs",
-    "lines_per_sec", "lines_per_sec_runs", "spread", "distinct_words"}``.
-    Wall time spans query start → drain (``processAllAvailable``),
-    including every state-store commit and complete-mode snapshot write.
+    "lines_per_sec", "lines_per_sec_runs", "spread", "distinct_words",
+    "phase_ms_runs"}``. Wall time spans query start → drain
+    (``processAllAvailable``), including every state-store commit and
+    complete-mode snapshot write. ``phase_ms_runs`` holds, per run, the
+    :func:`_phase_medians` of its micro-batches, so a moved wall time
+    can be traced to the trigger phase that moved it.
 
     The reported ``lines_per_sec`` is the MEDIAN of ``runs`` full
     replays (fresh checkpoint + KV dir each, same source files): the r7
@@ -78,6 +110,7 @@ def measure_stream_throughput(
         )
         counts = streaming_word_counts(raw)
         walls: list[float] = []
+        phases: list[dict] = []
         n_words = 0
         for i in range(runs):
             store = KVTableStore(spark, os.path.join(work, f"kv{i}"))
@@ -91,10 +124,11 @@ def measure_stream_throughput(
             try:
                 query.processAllAvailable()
                 walls.append(time.time() - t0)
+                phases.append(_phase_medians(query.recentProgress))
             finally:
                 query.stop()
             n_words = store.get_table("probe_wordcount", counts.schema).count()
-        med = sorted(walls)[len(walls) // 2]
+        med = _median(walls)
         return {
             "lines": total,
             "files": n_files,
@@ -104,6 +138,7 @@ def measure_stream_throughput(
             "lines_per_sec_runs": [round(total / w, 1) for w in walls],
             "spread": round(max(walls) / min(walls), 2),
             "distinct_words": n_words,
+            "phase_ms_runs": phases,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -237,7 +272,7 @@ def measure_state_scale(
                     ]
                 finally:
                     query.stop()
-                bm = sorted(batches)[len(batches) // 2] if batches else None
+                bm = _median(batches)
                 cells[tag] = {
                     "provider": prov,
                     "expansion": exp,

@@ -172,6 +172,57 @@ def test_bench_diff_adjudication_crowding_vs_confirmed():
     assert d["regressed"]["tiny"]["verdict"] == "crowding"
 
 
+def test_bench_diff_reports_lost_streaming_metric(tmp_path):
+    """A streaming probe that had lines_per_sec in the previous summary
+    and now records an error (or nothing) is a lost metric: listed by
+    diff_summaries and exit 1 from the CLI, even with no query slower."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(repo))
+    from tools.bench_diff import diff_summaries
+
+    canary = {"start": 0.2, "mid": 0.2, "end": 0.2}
+    prev = {
+        "noise_canary": canary,
+        "queries": {"a": 1.0},
+        "streaming_probe": {"lines_per_sec": 10573.2},
+        "streaming_probe_100x": {"lines_per_sec": 46400.4},
+    }
+    cur = {
+        "noise_canary": canary,
+        "queries": {"a": 1.0},
+        "streaming_probe": {"error": "query terminated", "lines_per_sec": None},
+        "streaming_probe_100x": None,
+    }
+    r = diff_summaries(prev, cur)
+    assert r["n_regressed_beyond_canary"] == 0
+    assert r["lost_metrics"] == {
+        "streaming_probe": {
+            "prev_lines_per_sec": 10573.2, "error": "query terminated",
+        },
+        "streaming_probe_100x": {"prev_lines_per_sec": 46400.4, "error": None},
+    }
+    # a probe still reporting, or one the previous round never had, is not lost
+    assert diff_summaries(prev, prev)["lost_metrics"] == {}
+    assert diff_summaries(cur, cur)["lost_metrics"] == {}
+
+    def cli(p, c):
+        for name, doc in (("prev.json", p), ("cur.json", c)):
+            (tmp_path / name).write_text(json.dumps(doc))
+        return subprocess.run(
+            [sys.executable, str(repo / "tools" / "bench_diff.py"),
+             str(tmp_path / "prev.json"), str(tmp_path / "cur.json")],
+            capture_output=True, text=True, timeout=60,
+        ).returncode
+
+    assert cli(prev, cur) == 1
+    assert cli(prev, prev) == 0
+
+
 def test_replica_cert_flag_annotations_cover_known_quadratic_rows():
     """Every row the r9/r10 artifacts showed super-linear by design must
     carry a QUADRATIC_BY_DESIGN annotation, so the cert tool's

@@ -441,3 +441,102 @@ def test_state_scale_probe_runs_both_providers(spark, tmp_path):
     # expansion grew the key cardinality materially
     assert cells["hdfs_x10"]["state_rows"] > 3 * cells["hdfs_x1"]["state_rows"]
     assert spark.conf.get(_PROVIDER_CONF, None) == before
+
+
+def test_stream_probe_reports_phase_medians_per_run(spark):
+    """measure_stream_throughput keeps, per run, the median of each
+    recentProgress durationMs phase and of the state commit time, so a
+    bench summary shows which trigger layer moved."""
+    from conftest import SF_SMALL
+
+    from spark_streaming_twitch_analytics_spark.streaming.probe import (
+        PHASES,
+        measure_stream_throughput,
+    )
+
+    r = measure_stream_throughput(spark, SF_SMALL, replicate=2, n_files=2, runs=2)
+    assert len(r["phase_ms_runs"]) == 2
+    for run in r["phase_ms_runs"]:
+        assert set(run) == {*PHASES, "stateCommit"}
+        assert all(isinstance(v, int) and v >= 0 for v in run.values()), run
+        assert run["addBatch"] > 0
+
+
+CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _drain_two_batches(spark, tmp_path) -> str:
+    """The flagship snapshot stream over two micro-batches; returns its
+    checkpoint dir."""
+    src, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    write_batch_file(src, B1, 1)
+    counts = SW.streaming_word_counts(file_line_source(spark, src))
+    q = SW.run_snapshot_query(counts, store, "wc", chk)
+    try:
+        q.processAllAvailable()
+        write_batch_file(src, B2, 2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return chk
+
+
+def test_checkpoint_commits_fork_no_readlink(spark, tmp_path):
+    """Checkpoint commits must not shell out to `readlink`: FileContext's
+    rename on `file:` forks one per temp file and per `.crc` twin (about
+    95 per 12,500-line micro-batch of the flagship stream). JFR's
+    jdk.ProcessStart events record every process the JVM starts."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        # the recording's positive control: a process it must see
+        jvm.java.lang.ProcessBuilder(["true"]).start().waitFor()
+        _drain_two_batches(spark, tmp_path)
+    finally:
+        rec.stop()
+    dump = jvm.java.io.File(str(tmp_path / "process_start.jfr")).toPath()
+    rec.dump(dump)
+    rec.close()
+    events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    programs = [e.getString("command").split()[0] for e in events]
+    assert "true" in programs
+    assert "readlink" not in programs, programs.count("readlink")
+
+
+def test_checkpoint_manager_keeps_no_overwrite_and_checksums(spark, tmp_path):
+    """What the FileSystem checkpoint manager must still guarantee: the
+    session resolves to it, an atomic create never overwrites an existing
+    file, and a drained state store keeps Spark's `N.delta.crc` checksum
+    next to Hadoop's `.N.delta.crc` twin."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = cfm.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf
+    )
+    assert manager.getClass().getName() == CKPT_MANAGER
+
+    target = tmp_path / "atomic"
+    for i in range(2):
+        out = manager.createAtomic(jvm.org.apache.hadoop.fs.Path(str(target)), False)
+        out.write(bytearray(b"write %d" % i))
+        if i == 0:
+            out.close()
+        else:
+            with pytest.raises(Py4JJavaError, match="already exists"):
+                out.close()
+    assert target.read_bytes() == b"write 0"
+
+    chk = _drain_two_batches(spark, tmp_path / "stream")
+    files = set(os.listdir(os.path.join(chk, "state", "0", "0")))
+    assert {"1.delta", "1.delta.crc", ".1.delta.crc"} <= files, sorted(files)

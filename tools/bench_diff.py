@@ -19,6 +19,12 @@ when it exceeds expected × max(spread, 1.25) AND by more than 0.3 s
 absolute (sub-0.3 s deltas on sub-second queries are scheduler jitter,
 not plan regressions).
 
+Lost metrics: a streaming probe (``streaming_probe``,
+``streaming_probe_100x``) that reported ``lines_per_sec`` in the previous
+summary and now carries an ``error`` or no figure is listed under
+``lost_metrics``: bench.py records a failed probe instead of raising, so
+without this a broken stream would read as a clean comparison.
+
 Library use (bench.py calls this before overwriting the summary):
     from tools.bench_diff import diff_summaries
     report = diff_summaries(prev_doc, cur_doc)
@@ -37,6 +43,19 @@ import sys
 
 MIN_ENVELOPE = 1.25  # canary-quiet floor: host noise never reads as 0
 ABS_FLOOR_SEC = 0.3  # ignore sub-0.3s deltas — scheduler jitter
+STREAM_PROBES = ("streaming_probe", "streaming_probe_100x")
+
+
+def _lost_metrics(prev: dict, cur: dict) -> dict:
+    """{probe: {"prev_lines_per_sec", "error"}} for every streaming probe
+    that had ``lines_per_sec`` in ``prev`` and has none in ``cur``."""
+    lost = {}
+    for key in STREAM_PROBES:
+        before = (prev.get(key) or {}).get("lines_per_sec")
+        now = cur.get(key) or {}
+        if before is not None and now.get("lines_per_sec") is None:
+            lost[key] = {"prev_lines_per_sec": before, "error": now.get("error")}
+    return lost
 
 
 def _canary_stats(doc: dict) -> tuple[float, float] | None:
@@ -50,10 +69,16 @@ def _canary_stats(doc: dict) -> tuple[float, float] | None:
 
 def diff_summaries(prev: dict, cur: dict) -> dict:
     """Compare two bench_summary docs; returns {ratio, envelope,
-    n_common, n_regressed_beyond_canary, regressed: {name: row}}."""
+    n_common, n_regressed_beyond_canary, regressed: {name: row},
+    lost_metrics: {probe: row}}."""
+    lost = _lost_metrics(prev, cur)
     pc, cc = _canary_stats(prev), _canary_stats(cur)
     if pc is None or cc is None:
-        return {"error": "missing canary samples", "n_regressed_beyond_canary": None}
+        return {
+            "error": "missing canary samples",
+            "n_regressed_beyond_canary": None,
+            "lost_metrics": lost,
+        }
     ratio = cc[0] / pc[0]
     envelope = max(MIN_ENVELOPE, cc[1], pc[1])
     prev_q, cur_q = prev.get("queries", {}), cur.get("queries", {})
@@ -77,6 +102,7 @@ def diff_summaries(prev: dict, cur: dict) -> dict:
         "n_common": len(common),
         "n_regressed_beyond_canary": len(regressed),
         "regressed": regressed,
+        "lost_metrics": lost,
         "rule": f"flag if cur > prev*ratio*max(spread,{MIN_ENVELOPE}) "
         f"and cur-prev*ratio > {ABS_FLOOR_SEC}s",
     }
@@ -191,11 +217,14 @@ def main() -> None:
     report = diff_summaries(prev, cur)
     print(json.dumps(report, indent=1, sort_keys=True))
     # exit contract (ADVICE r10): 0 = clean zero-regression comparison,
-    # 1 = regressions flagged, 2 = comparison impossible (missing
-    # canaries) — never a silent 0 when nothing was actually compared
+    # 1 = regressions flagged or a streaming metric lost, 2 = comparison
+    # impossible (missing canaries) — never a silent 0 when nothing was
+    # actually compared
     if report.get("error") or report.get("n_regressed_beyond_canary") is None:
         sys.exit(2)
-    sys.exit(0 if not report["n_regressed_beyond_canary"] else 1)
+    sys.exit(
+        1 if report["n_regressed_beyond_canary"] or report["lost_metrics"] else 0
+    )
 
 
 if __name__ == "__main__":
