@@ -242,3 +242,60 @@ def test_replica_cert_flag_annotations_cover_known_quadratic_rows():
     ):
         assert name in QUADRATIC_BY_DESIGN, name
         assert len(QUADRATIC_BY_DESIGN[name]) > 20  # a real explanation
+
+
+def test_time_query_runs_warm_plus_best_of_two(spark, monkeypatch):
+    """bench.time_query is the one timing protocol every tool shares:
+    the query is built 3 times (warm + 2 timed) and release_all runs 3
+    times (after the warm run and after each timed run)."""
+    import types
+
+    import bench
+
+    built, released = [], []
+
+    def fn(s, sf_dir):
+        built.append(sf_dir)
+        return s.range(1)
+
+    monkeypatch.setattr(
+        bench.registry, "get", lambda name: types.SimpleNamespace(fn=fn)
+    )
+    monkeypatch.setattr(bench, "release_all", lambda: released.append(1))
+    sec = bench.time_query(spark, "any_query", "sf_dir")
+    assert built == ["sf_dir"] * 3
+    assert len(released) == 3
+    assert isinstance(sec, float) and sec >= 0
+
+
+def test_fresh_session_retime_runs_bench_names_mode(monkeypatch):
+    """tools/bench_diff's fresh-session retime launches `bench.py <names>`:
+    it returns {name: sec} and never rewrites the round artifact
+    bench_summary.json."""
+    from pathlib import Path
+
+    from conftest import SF_SMALL
+    from tools.bench_diff import _fresh_session_retime
+
+    repo = Path(__file__).resolve().parents[1]
+    summary = repo / "bench_summary.json"
+    before = summary.read_bytes()
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
+    out = _fresh_session_retime(["q1_pricing_summary"], str(repo))
+    assert set(out) == {"q1_pricing_summary"}
+    assert isinstance(out["q1_pricing_summary"], float)
+    assert out["q1_pricing_summary"] > 0
+    assert summary.read_bytes() == before
+
+
+def test_bench_and_every_tool_import():
+    """bench and every tools/*.py module import by name without running
+    main, so a deleted module cannot leave a dangling import behind."""
+    import importlib
+    from pathlib import Path
+
+    importlib.import_module("bench")
+    tools = sorted(Path(__file__).resolve().parents[1].glob("tools/*.py"))
+    assert tools
+    for path in tools:
+        importlib.import_module(f"tools.{path.stem}")

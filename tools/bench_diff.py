@@ -29,6 +29,10 @@ Library use (bench.py calls this before overwriting the summary):
     from tools.bench_diff import diff_summaries
     report = diff_summaries(prev_doc, cur_doc)
 
+Adjudication: ``adjudicate_regressions`` re-times every flagged query in
+a fresh session with ``bench.py <names>`` (the same ``bench.time_query``
+protocol) and stamps each row ``crowding`` or ``confirmed_regression``.
+
 CLI: python tools/bench_diff.py [prev_json] [cur_json]
   (defaults: prev = bench_summary.json@HEAD via git show, cur = working
   tree bench_summary.json)
@@ -116,8 +120,8 @@ def adjudicate_regressions(
     other tenants) rather than a plan regression — r10's artifact
     permanently reads "4 regressed" for what fresh-session retiming
     proved was crowding. This re-times every flagged query in a FRESH
-    session (new JVM, the ``tools/crowding_retime.py`` protocol) and
-    records the verdict per row:
+    session (new JVM, ``bench.py <names>``: the ``bench.time_query``
+    protocol) and records the verdict per row:
 
     - ``crowding``: the fresh-session time is back within the canary
       envelope of the expected time — the suite-run number was host
@@ -164,12 +168,11 @@ def adjudicate_regressions(
 
 
 def _fresh_session_retime(names: list[str], repo_root: str) -> dict:
-    """Run ``tools/crowding_retime.py`` in a subprocess (fresh JVM, same
-    warm + best-of-2 noop protocol) and return its {name: sec} map (the
-    final JSON line of its stdout)."""
+    """Run ``bench.py <names>`` in a subprocess (fresh JVM, same warm +
+    best-of-2 noop protocol, no summary written) and return its
+    {name: sec} map (the final JSON line of its stdout)."""
     out = subprocess.run(
-        [sys.executable, os.path.join(repo_root, "tools", "crowding_retime.py"),
-         *names],
+        [sys.executable, os.path.join(repo_root, "bench.py"), *names],
         cwd=repo_root,
         capture_output=True,
         timeout=1800,

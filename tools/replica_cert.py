@@ -5,10 +5,10 @@ SCALING.md carries per-shape replica probes; this tool runs the ENTIRE
 bench timed set (every registered query except streaming_* and the
 documented DEMONSTRATORS — the HEADLINE set is a subset) once at a ×k
 replica of sf0.1 (≈ sf1 at the default k=10) with the exact bench.py
-measurement protocol (noop sink over every column, warm + best-of-2),
-and records per-query wall times plus the t(k×)/t(1×) ratio into one
-JSON artifact — the strongest local evidence available for the 100 TB
-design claims.
+measurement protocol (``bench.time_query``: noop sink over every column,
+warm + best-of-2), and records per-query wall times plus the t(k×)/t(1×)
+ratio into one JSON artifact — the strongest local evidence available
+for the 100 TB design claims.
 
 Flagging: a query is flagged super-linear when ratio > k·1.5 AND the
 replica time exceeds 5 s (the absolute floor keeps fixed per-query
@@ -27,15 +27,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from spark_streaming_twitch_analytics_spark import registry
-from spark_streaming_twitch_analytics_spark.cache import release_all
+from pyspark.sql import functions as F
+
+from bench import bench_set, time_query
 from spark_streaming_twitch_analytics_spark.session import get_spark
-from tools.scale_replica import SRC, build_replica
+from spark_streaming_twitch_analytics_spark.tables import load_table
+
+SRC = "/root/testdata/sf0.1"
 
 # Rows whose super-linear decade growth is the DESIGN, not a regression:
 # exact meter sides and flat-scan capability demonstrators whose
@@ -57,28 +61,105 @@ QUADRATIC_BY_DESIGN = {
 }
 
 
-def _time_query(spark, name: str, sf_dir: str) -> float:
-    qd = registry.get(name)
+def build_replica(spark, k: int, out: str) -> None:
+    """Write SRC replicated k× into ``out`` with key remapping:
 
-    def run() -> None:
-        # noop sink materializes EVERY column (count() would let
-        # Catalyst prune expensive expressions — bench.py's rule)
-        qd.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    - doc_id / vec_id / event_id / orderkey-family keys are offset per
+      replica so uniqueness invariants hold;
+    - document text gets a per-replica suffix so the corpus does NOT
+      become k exact copies (which would measure pathological dedup
+      blowup, not scaling); length/token distributions are preserved;
+    - embeddings perturb one coordinate per replica (keeps cosine
+      structure, breaks exact duplication).
+    """
+    os.makedirs(out, exist_ok=True)
+    reps = spark.range(k).select(F.col("id").alias("rep"))
 
-    release_all()
-    run()  # warm: codegen + any fingerprint-keyed artifact build
-    best = float("inf")
-    for _ in range(2):
-        release_all()
-        t0 = time.time()
-        run()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+    docs = load_table(spark, SRC, "documents")
+    n_docs = docs.count()
+    (
+        docs.crossJoin(reps)
+        .select(
+            (F.col("doc_id") + F.col("rep") * F.lit(n_docs)).alias("doc_id"),
+            F.when(F.col("rep") == 0, F.col("text"))
+            .otherwise(F.concat(F.col("text"), F.lit(" r"), F.col("rep")))
+            .alias("text"),
+            "lang",
+            "source",
+            "n_chars",
+        )
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(f"{out}/documents.parquet")
+    )
+
+    emb = load_table(spark, SRC, "embeddings")
+    n_vec = emb.count()
+    (
+        emb.crossJoin(reps)
+        .select(
+            (F.col("vec_id") + F.col("rep") * F.lit(n_vec)).alias("vec_id"),
+            F.transform(
+                F.col("embedding"),
+                lambda x, i: F.when(
+                    (i == 0) & (F.col("rep") > 0),
+                    x + F.col("rep").cast("float") / 100.0,
+                ).otherwise(x),
+            ).alias("embedding"),
+            "label",
+        )
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(f"{out}/embeddings.parquet")
+    )
+
+    ev = load_table(spark, SRC, "events")
+    n_ev = ev.count()
+    (
+        ev.crossJoin(reps)
+        .select(
+            (F.col("event_id") + F.col("rep") * F.lit(n_ev)).alias("event_id"),
+            "ts",
+            "user_id",
+            "event_type",
+            "value",
+            "props",
+        )
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(f"{out}/events.parquet")
+    )
+
+    # relational star schema: replicate the two big fact tables with key
+    # offsets; dims ride along unreplicated (realistic: dims are small)
+    orders = load_table(spark, SRC, "orders")
+    li = load_table(spark, SRC, "lineitem")
+    max_ok = orders.agg(F.max("o_orderkey")).head()[0] + 1
+    (
+        orders.crossJoin(reps)
+        .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * F.lit(max_ok))
+        .drop("rep")
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(f"{out}/orders.parquet")
+    )
+    (
+        li.crossJoin(reps)
+        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * F.lit(max_ok))
+        .drop("rep")
+        .repartition(32)
+        .write.mode("overwrite")
+        .parquet(f"{out}/lineitem.parquet")
+    )
+    for t in ("region", "nation", "customer", "supplier", "part"):
+        src_p, dst_p = f"{SRC}/{t}.parquet", f"{out}/{t}.parquet"
+        if os.path.isdir(src_p):
+            shutil.copytree(src_p, dst_p, dirs_exist_ok=True)
+        else:
+            shutil.copyfile(src_p, dst_p)
 
 
 def main() -> None:
-    import bench
-
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     out_json = (
         sys.argv[2]
@@ -90,7 +171,7 @@ def main() -> None:
     )
     # default: the FULL bench timed set (streaming_* and DEMONSTRATORS
     # excluded by bench_set's rule; HEADLINE is a subset)
-    names = sys.argv[3:] or bench.bench_set()[0]
+    names = sys.argv[3:] or bench_set()[0]
     rep_dir = f"/tmp/sf_replica_x{k}"
     spark = get_spark()
     if not os.path.exists(f"{rep_dir}/documents.parquet"):
@@ -101,8 +182,8 @@ def main() -> None:
     rows: dict[str, dict] = {}
     for i, name in enumerate(names, 1):
         try:
-            base = _time_query(spark, name, SRC)
-            rep = _time_query(spark, name, rep_dir)
+            base = time_query(spark, name, SRC)
+            rep = time_query(spark, name, rep_dir)
         except Exception as e:  # record, keep certifying the rest
             rows[name] = {"error": str(e)[:200]}
             print(f"[{i}/{len(names)}] {name:32s} ERROR {e}", flush=True)

@@ -15,14 +15,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_streaming_twitch_analytics_spark.session import get_spark
 from spark_streaming_twitch_analytics_spark.streaming.probe import (
+    BENCH_N_FILES,
+    BENCH_REPLICATE,
     measure_stream_throughput,
 )
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    replicate = int(sys.argv[2]) if len(sys.argv) > 2 else 20
-    n_files = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    replicate = int(sys.argv[2]) if len(sys.argv) > 2 else BENCH_REPLICATE
+    n_files = int(sys.argv[3]) if len(sys.argv) > 3 else BENCH_N_FILES
 
     spark = get_spark(app_name="stream_probe")
     try:
