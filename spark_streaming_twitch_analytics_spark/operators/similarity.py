@@ -46,6 +46,10 @@ PROD_IVF_CELLS = 65_536
 PROD_IVF_PROBE = 32
 PROD_LSH_BITS = 16
 
+# Bound on the query side that the Arrow top-k scans collect to the driver
+# as a dense (nq, DIM) float64 matrix: 100k queries are ~51 MB.
+MAX_QUERY_ROWS = 100_000
+
 
 def _pairs(
     queries: DataFrame,
@@ -433,10 +437,17 @@ def _collect_queries(queries: DataFrame):
     ids, a dense float64 (nq, dim) matrix and its row norms — or None
     when there are no queries (each caller returns its own empty
     result). The ANN contract keeps queries the small side, the same
-    cardinality assumption as a broadcast join."""
+    cardinality assumption as a broadcast join; a query side over
+    :data:`MAX_QUERY_ROWS` raises ``ValueError`` instead of being
+    collected whole."""
     import numpy as np
 
-    q_pd = queries.select("vec_id", "embedding").toPandas()
+    q_pd = queries.select("vec_id", "embedding").limit(MAX_QUERY_ROWS + 1).toPandas()
+    if len(q_pd) > MAX_QUERY_ROWS:
+        raise ValueError(
+            f"query side has more than MAX_QUERY_ROWS={MAX_QUERY_ROWS} rows; "
+            "the ANN scans collect every query to the driver"
+        )
     if len(q_pd) == 0:
         return None
     q_ids = q_pd["vec_id"].to_numpy(dtype=np.int64)

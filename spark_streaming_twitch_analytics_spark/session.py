@@ -14,9 +14,77 @@ and AQE coalesces the excess at runtime).
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+NIO_FS_SOURCE = Path(__file__).parent / "resources" / "NioLocalFileSystem.java"
+NIO_FS_CLASS = "graft.NioLocalFileSystem"
+
+
+def nio_fs_classes(source: Path = NIO_FS_SOURCE) -> str | None:
+    """Directory holding ``source`` compiled against Spark's jars, or None
+    (after one warning) when the host has no ``javac`` or the build fails.
+
+    Built once per source sha256 under ``$XDG_CACHE_HOME`` (or
+    ``~/.cache``): javac writes into a staging dir inside the cache root,
+    which is then renamed into place, so a concurrent build or a TMPDIR on
+    another device never leaves a partial directory behind."""
+    text = source.read_bytes()
+    root = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
+    root = root / "spark_streaming_twitch_analytics_spark"
+    out = root / f"nio-fs-{hashlib.sha256(text).hexdigest()[:16]}"
+    if out.is_dir():
+        return str(out)
+    javac = shutil.which("javac")
+    if javac is None:
+        return _not_built("no javac on PATH")
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = os.path.join(_find_spark_home(), "jars", "*")
+    stage = None
+    try:
+        root.mkdir(parents=True, exist_ok=True)
+        stage = tempfile.mkdtemp(prefix=".stage-", dir=root)
+        subprocess.run(
+            [javac, "--release", "17", "-cp", jars, "-d", stage, str(source)],
+            check=True, capture_output=True, text=True,
+        )
+        os.replace(stage, out)
+    except (OSError, subprocess.CalledProcessError) as e:
+        if not out.is_dir():  # else a concurrent build renamed first
+            return _not_built(getattr(e, "stderr", None) or str(e))
+    finally:
+        if stage is not None:
+            shutil.rmtree(stage, ignore_errors=True)
+    return str(out)
+
+
+def _not_built(reason: str) -> None:
+    logging.getLogger(__name__).warning(
+        "%s not built, so file: writes fork chmod: %s", NIO_FS_CLASS, reason
+    )
+
+
+def nio_fs_conf(master: str) -> dict[str, str]:
+    """Confs that make ``file:`` paths use :data:`NIO_FS_CLASS` — empty for
+    a non-local master or when the class could not be built."""
+    if not master.startswith("local"):
+        return {}
+    classes = nio_fs_classes()
+    if classes is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": NIO_FS_CLASS,
+    }
 
 
 def get_spark(
@@ -86,6 +154,18 @@ def get_spark(
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
+    # `file:` goes through NioLocalFileSystem: a LocalFileSystem that sets
+    # permissions with java.nio. Without libhadoop Hadoop forks `chmod`
+    # for every file and directory it creates: a JFR recording of one
+    # 4-batch drain of the flagship word count showed 181 processes, all
+    # chmod, and perfbench counts their CPU. Checksum twins, file modes and
+    # the no-overwrite rename of the class Spark's jars register for
+    # `file:` (Hive's ProxyLocalFileSystem) are kept. The class path is
+    # fixed at JVM launch, so a JVM already up (say, one started by a
+    # plain SparkSession.builder) keeps its FS.
+    if SparkContext._gateway is None:
+        for k, v in nio_fs_conf(master).items():
+            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -319,6 +319,20 @@ def test_brute_force_np_empty_query_set_returns_empty(spark):
     assert out.columns == ["q_id", "c_id", "cos", "rn"]
 
 
+def test_query_collect_over_bound_raises_naming_it(spark, monkeypatch):
+    """The driver collect of the query side is bounded: one row over
+    MAX_QUERY_ROWS raises instead of collecting; at the bound it runs."""
+    vecs = spark.createDataFrame(
+        [(i, [float(i + 1)] * 64, 0) for i in range(5)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    monkeypatch.setattr(similarity, "MAX_QUERY_ROWS", 4)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS=4"):
+        similarity.brute_force_topk_np(vecs, vecs, k=3)
+    out = similarity.brute_force_topk_np(vecs.filter(F.col("vec_id") < 4), vecs, k=3)
+    assert out.count() == 4 * 3
+
+
 def test_ppjoin_finds_planted_pairs_exactly(planted):
     got = {
         (r["a"], r["b"]): r["jaccard"]

@@ -485,12 +485,19 @@ def _drain_two_batches(spark, tmp_path) -> str:
     return chk
 
 
-def test_checkpoint_commits_fork_no_readlink(spark, tmp_path):
-    """Checkpoint commits must not shell out to `readlink`: FileContext's
-    rename on `file:` forks one per temp file and per `.crc` twin (about
-    95 per 12,500-line micro-batch of the flagship stream). JFR's
+def test_flagship_drain_forks_no_chmod_or_readlink(spark, tmp_path):
+    """The flagship stream's file writes must not shell out. Checkpoint
+    commits through FileContext fork `readlink` per temp file and per
+    `.crc` twin; Hadoop's stock `file:` setPermission forks `chmod` for
+    every file and directory it creates (state deltas, logs, the KV
+    snapshot parquet): 181 per 4-batch `chat_backlog` drain. JFR's
     jdk.ProcessStart events record every process the JVM starts."""
+    from spark_streaming_twitch_analytics_spark.session import NIO_FS_CLASS
+
     jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == NIO_FS_CLASS
     rec = jvm.jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
@@ -506,6 +513,7 @@ def test_checkpoint_commits_fork_no_readlink(spark, tmp_path):
     events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
     programs = [e.getString("command").split()[0] for e in events]
     assert "true" in programs
+    assert "chmod" not in programs, programs.count("chmod")
     assert "readlink" not in programs, programs.count("readlink")
 
 

@@ -8,6 +8,8 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,3 +73,13 @@ def test_events_nanos_timestamps_still_read_as_timestamp(spark, tmp_path):
         assert df.schema["ts"].dataType == T.TimestampType()
         got = df.orderBy("event_id").select(F.unix_micros("ts")).collect()
         assert [r[0] for r in got] == [n // 1000 for n in ns]
+
+
+def test_missing_column_raises_analysis_exception_naming_it(spark):
+    """A typo on a loaded table fails at analysis, and the message names
+    the column: pinned before the Python call-site capture is turned off."""
+    from conftest import SF_SMALL
+
+    docs = tables.load_table(spark, SF_SMALL, "documents")
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        docs.select("doc_id", "no_such_column")
