@@ -2,8 +2,8 @@
 
 Rebuilds ``helpers.formatRawDataFrame`` (``SparkRunner.scala:191-209``) and
 the wordcount branch (``SparkRunner.scala:115-127``) as one declarative
-DataFrame plan: parse → tokenize → stopword filter → explode → length
-filter → groupBy.count. Catalyst turns the count into
+DataFrame plan: parse → tokenize → explode → word filter (length and
+stopwords) → groupBy.count. Catalyst turns the count into
 partial-HashAggregate → shuffle → final-HashAggregate automatically —
 the map-side combine the reference hand-rolled with ``reduceByKey``
 (``SparkRunner.scala:117,126``) is free here, and the plan survives a
@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import DEFAULT_LANG, MIN_WORD_LENGTH
-from ..functions.text import countable_words, countable_words_sql
+from ..functions.text import countable_words_sql, is_countable_word, tokenize
 
 RAW_SCHEMA = "value string"  # receiver output (IRCBot.scala:52-53)
 
@@ -101,11 +101,14 @@ def word_counts(
     min_len: int = MIN_WORD_LENGTH,
     extra_keys: list[str] | None = None,
 ) -> DataFrame:
-    """tokenize → stopwords → explode → length filter → count
-    (``SparkRunner.scala:121-126`` rebuilt; A2/A3)."""
+    """tokenize → explode → word filter → count
+    (``SparkRunner.scala:121-126`` rebuilt; A2/A3). The filter is a row
+    predicate on the exploded word, so split, explode, filter and the
+    partial count run in one generated-code stage."""
     keys = extra_keys or []
     return (
-        df.select(*keys, F.explode(countable_words(text, lang, min_len)).alias("word"))
+        df.select(*keys, F.explode(tokenize(text)).alias("word"))
+        .where(is_countable_word(F.col("word"), lang, min_len))
         .groupBy(*keys, "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

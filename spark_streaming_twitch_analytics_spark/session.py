@@ -22,6 +22,7 @@ import subprocess
 import tempfile
 from pathlib import Path
 
+import pyspark
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
@@ -33,14 +34,16 @@ def nio_fs_classes(source: Path = NIO_FS_SOURCE) -> str | None:
     """Directory holding ``source`` compiled against Spark's jars, or None
     (after one warning) when the host has no ``javac`` or the build fails.
 
-    Built once per source sha256 under ``$XDG_CACHE_HOME`` (or
-    ``~/.cache``): javac writes into a staging dir inside the cache root,
-    which is then renamed into place, so a concurrent build or a TMPDIR on
-    another device never leaves a partial directory behind."""
-    text = source.read_bytes()
+    Built once per sha256 of the source and ``pyspark.__version__`` (a
+    Spark upgrade brings other Hadoop jars to compile against) under
+    ``$XDG_CACHE_HOME`` (or ``~/.cache``): javac writes into a staging
+    dir inside the cache root, which is then renamed into place, so a
+    concurrent build or a TMPDIR on another device never leaves a partial
+    directory behind."""
+    key = hashlib.sha256(source.read_bytes() + b"\0" + pyspark.__version__.encode())
     root = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
     root = root / "spark_streaming_twitch_analytics_spark"
-    out = root / f"nio-fs-{hashlib.sha256(text).hexdigest()[:16]}"
+    out = root / f"nio-fs-{key.hexdigest()[:16]}"
     if out.is_dir():
         return str(out)
     javac = shutil.which("javac")

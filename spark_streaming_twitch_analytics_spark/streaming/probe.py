@@ -41,8 +41,9 @@ def _median(vals: list):
 def _phase_medians(progress: list[dict]) -> dict:
     """Per-phase median over a run's data-carrying micro-batches: each
     ``durationMs`` phase in :data:`PHASES`, plus ``stateCommit`` (the
-    stateful operators' ``commitTimeMs``, summed per batch). A phase no
-    batch reported reads None."""
+    stateful operators' ``commitTimeMs``) and ``stateMemoryBytes`` (their
+    ``memoryUsedBytes``), each summed per batch. A phase no batch reported
+    reads None."""
     batches = [p for p in progress if p.get("numInputRows", 0) > 0]
     out = {
         ph: _median(
@@ -50,13 +51,17 @@ def _phase_medians(progress: list[dict]) -> dict:
         )
         for ph in PHASES
     }
-    out["stateCommit"] = _median(
-        [
-            sum(op.get("commitTimeMs", 0) for op in p["stateOperators"])
-            for p in batches
-            if p.get("stateOperators")
-        ]
-    )
+    for name, key in (
+        ("stateCommit", "commitTimeMs"),
+        ("stateMemoryBytes", "memoryUsedBytes"),
+    ):
+        out[name] = _median(
+            [
+                sum(op.get(key, 0) for op in p["stateOperators"])
+                for p in batches
+                if p.get("stateOperators")
+            ]
+        )
     return out
 
 

@@ -4,15 +4,19 @@ reference's core loop (``SparkRunner.scala:115-160``) rebuilt:
 | reference (DStream)                      | rebuild                      |
 |------------------------------------------|------------------------------|
 | ``transform(rdd→DF→rdd)`` per batch ST1  | one continuous DataFrame plan|
+| ``filter(_.length > 3)`` + stopwords     | row predicate on the exploded|
+|                                          |   word, in generated code    |
 | ``reduceByKey`` + ``updateStateByKey``   | streaming groupBy().count()  |
 |   (A2/A4, hand-rolled state)             |   (state store, update mode) |
-| ``foreachRDD`` → Redis Overwrite ST5     | foreachBatch → KVTableStore  |
+| ``foreachRDD`` → Redis Overwrite ST5     | foreachBatch → KVTableStore; |
+|                                          |   snapshot from one task     |
 | restore on start: none (state lost)      | seed from store (S4 fallback)|
 | checkpoint ``file:///tmp``               | checkpointLocation option    |
 
 Two sink flavors, matching the reference's two modes:
 - **complete + overwrite**: whole state snapshot per batch
-  (``SaveMode.Overwrite``, ``SparkRunner.scala:143``).
+  (``SaveMode.Overwrite``, ``SparkRunner.scala:143``), written from one
+  task as one part file per version.
 - **update + merge**: only changed keys flow from the state store to the
   sink — per-batch COMPUTE and shuffle are bounded by batch novelty.
   The bundled parquet-file store still persists each version as a full
@@ -29,9 +33,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..constants import DEFAULT_LANG, MIN_WORD_LENGTH
-from ..functions.text import countable_words
 from ..operators.merge import update_table
-from ..operators.messages import format_raw_messages
+from ..operators.messages import format_raw_messages, word_counts
 from ..sources.kv_store import KVTableStore, checkpoint_lineage
 
 COUNT_SCHEMA = T.StructType(
@@ -45,15 +48,11 @@ COUNT_SCHEMA = T.StructType(
 def streaming_word_counts(
     raw: DataFrame, lang: str = DEFAULT_LANG, min_len: int = MIN_WORD_LENGTH
 ) -> DataFrame:
-    """raw ``value`` stream → formatted → exploded words → running count.
-    One declarative plan; Spark's incremental planner maintains the
+    """raw ``value`` stream → formatted → :func:`word_counts` → running
+    count. One declarative plan; Spark's incremental planner maintains the
     per-word state the reference hand-rolled in ``updateFunction``
     (``SparkRunner.scala:171-188``)."""
-    fmt = format_raw_messages(raw)
-    words = fmt.select(
-        F.explode(countable_words(F.col("text"), lang, min_len)).alias("word")
-    )
-    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    return word_counts(F.col("text"), format_raw_messages(raw), lang, min_len)
 
 
 def streaming_category_counts(raw: DataFrame, scores_to_cats) -> DataFrame:
@@ -81,10 +80,17 @@ def run_snapshot_query(
     running state (reference ST5 snapshot semantics). ``batch_interval``
     maps the reference's CLI micro-batch clock (S2,
     ``Seconds(BatchDuration)``) to a processingTime trigger; None = fire
-    as fast as data arrives."""
+    as fast as data arrives.
+
+    The snapshot is Redis-sized by contract (~54k rows, ~545 KB for the
+    flagship backlog), so it is written from ONE task as one part file:
+    ``coalesce(1)`` runs every state-store partition in that task, and
+    the write job's Hadoop conf (over a thousand entries, ~19 ms to
+    deserialize) is read once per trigger instead of once per shuffle
+    partition. The state store keeps its partitions."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        store.write(batch_df, table, mode="overwrite", ttl=ttl)
+        store.write(batch_df.coalesce(1), table, mode="overwrite", ttl=ttl)
 
     writer = (
         counts.writeStream.outputMode("complete")
@@ -258,13 +264,7 @@ def run_dual_branch_query(
     def sink(batch_raw: DataFrame, epoch_id: int) -> None:
         fmt = format_raw_messages(batch_raw).persist()
         try:
-            words = (
-                fmt.select(
-                    F.explode(countable_words(F.col("text"), lang)).alias("word")
-                )
-                .groupBy("word")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
+            words = word_counts(F.col("text"), fmt, lang)
             cats = (
                 fmt.select(F.explode(scores_to_cats(F.col("text"))).alias("category"))
                 .groupBy("category")
@@ -319,9 +319,4 @@ def batch_oracle_word_counts(
     """The streaming-correctness oracle: running count after processing a
     prefix ≡ batch count over that prefix (SURVEY §5)."""
     raw = spark.createDataFrame([(x,) for x in raw_lines], "value string")
-    fmt = format_raw_messages(raw)
-    return (
-        fmt.select(F.explode(countable_words(F.col("text"), lang)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return word_counts(F.col("text"), format_raw_messages(raw), lang)

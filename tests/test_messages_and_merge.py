@@ -3,8 +3,14 @@
 
 from __future__ import annotations
 
+import random
+import re
+
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from spark_streaming_twitch_analytics_spark.constants import STOPWORDS
 from spark_streaming_twitch_analytics_spark.operators import merge, messages, topk
 from spark_streaming_twitch_analytics_spark.sources.irc import format_privmsg
 
@@ -158,3 +164,107 @@ def test_epoch_guard_is_scoped_to_checkpoint_lineage(spark, tmp_path):
     assert apply_delta_once(store, "t", COUNT_SCHEMA, delta, "word", "cnt", 0, lineage="ckpt-B")
     rows = {r["word"]: r["cnt"] for r in store.get_table("t", COUNT_SCHEMA).collect()}
     assert rows == {"w": 2}
+
+
+# word-count fuzz vocabulary: both stopword lists, words at and around
+# the length threshold, case variants, `même` composed (a long fr
+# stopword) and decomposed (5 code points, no stopword), astral-plane
+# characters (one code point each in both engines). Separators are ASCII
+# whitespace: on Unicode spaces the tokenizer twins differ (see
+# test_tokenize_trim_differs_from_duckdb_on_unicode_space).
+_WC_VOCAB = [
+    *STOPWORDS["en"], *STOPWORDS["fr"], "The", "WITH", "Même", "MÊME",
+    "me\u0302me", "abc", "abcd", "abcde", "café", "naïve", "日本語です",
+    "a\U0001D11Eb", "a\U0001D11Ebc", "😀😀😀", "😀😀😀😀", "x😀😀😀", "alpha",
+    "bravo", "charlie", "chat:", "#chan",
+]
+_WC_SEPS = [" ", "  ", "\t", " \n "]
+
+
+def _fuzz_texts(seed: int, n: int) -> list[str | None]:
+    rng = random.Random(seed)
+    texts: list[str | None] = [None, "", " ", "   ", "\t\n", " \t \n  "]
+    for _ in range(n):
+        words = rng.choices(_WC_VOCAB, k=rng.randint(1, 12))
+        seps = rng.choices(_WC_SEPS, k=len(words))
+        edge = rng.choice(["", " ", "  ", "\t"])
+        texts.append(edge + "".join(w + sep for w, sep in zip(words, seps)))
+    return texts
+
+
+@pytest.mark.parametrize("lang", ["en", "fr"])
+def test_word_counts_row_filter_matches_duckdb_twin(spark, lang):
+    """The row-form word filter counts what the DuckDB twin's list_filter
+    counts, keyed and unkeyed, on fixed-seed fuzz text. `fr` lists 11
+    stopwords longer than the length threshold, more than Catalyst's
+    In-to-InSet threshold of 10, so it is checked through InSet; `en`
+    lists 5 and stays In."""
+    texts = _fuzz_texts(seed=4217, n=400)
+    rows = [(i % 3, t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "src int, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (src INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    for keys in (None, ["src"]):
+        wc = messages.word_counts(F.col("text"), df, lang, extra_keys=keys)
+        got = sorted(tuple(r) for r in wc.collect())
+        want = sorted(con.execute(
+            messages.word_counts_sql("text", "docs", lang, extra_keys=keys)
+        ).fetchall())
+        assert got == want
+        assert len(got) > 10
+    words = {r[-2] for r in got}
+    own, other = ("with", "nous") if lang == "en" else ("nous", "with")
+    assert {other, "me\u0302me", "😀😀😀😀", "x😀😀😀", "a\U0001D11Ebc"} <= words
+    assert not {own, "😀😀😀", "a\U0001D11Eb"} & words
+    assert ("même" in words) == (lang == "en")
+    optimized = wc._jdf.queryExecution().optimizedPlan().toString()
+    assert ("INSET" in optimized) == (lang == "fr"), optimized
+    assert "lambdafunction" not in optimized.lower(), optimized
+    # split, explode and the filter run in generated code (a `*(n)`
+    # prefix); a higher-order function would keep Generate out of it
+    executed = wc._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"\*\(\d+\) Generate", executed), executed
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="tokenize trims U+0020 only; DuckDB's trim also strips Unicode "
+    "spaces, so a word ending in U+3000 is kept whole by Spark only",
+)
+def test_tokenize_trim_differs_from_duckdb_on_unicode_space(spark):
+    from spark_streaming_twitch_analytics_spark.functions.text import (
+        tokenize,
+        tokenize_sql,
+    )
+
+    text = "alpha\u3000"
+    got = spark.range(1).select(tokenize(F.lit(text))).head()[0]
+    want = duckdb.connect().execute(f"SELECT {tokenize_sql('?')}", [text]).fetchone()[0]
+    assert got == want
+
+
+def test_streaming_word_counts_plan_has_no_lambda(spark, tmp_path):
+    """The flagship stream filters words as a row predicate: the optimized
+    plan of a running micro-batch holds no higher-order function (which
+    would run interpreted) and its Generate runs in generated code."""
+    from spark_streaming_twitch_analytics_spark.sources.irc import (
+        file_line_source,
+        write_batch_file,
+    )
+    from spark_streaming_twitch_analytics_spark.streaming import wordcount as SW
+
+    src = str(tmp_path / "in")
+    write_batch_file(src, [format_privmsg(1, "u", "c", "alpha the bravo")], 1)
+    counts = SW.streaming_word_counts(file_line_source(spark, src))
+    q = SW.memory_sink_query(counts, "wc_plan_check")
+    try:
+        q.processAllAvailable()
+        execution = q._jsq.streamingQuery().lastExecution()
+        optimized = execution.optimizedPlan().toString()
+        executed = execution.executedPlan().toString()
+    finally:
+        q.stop()
+    assert "Generate" in optimized and "Filter" in optimized, optimized
+    assert "lambdafunction" not in optimized.lower(), optimized
+    assert re.search(r"\*\(\d+\) Generate", executed), executed

@@ -1,7 +1,8 @@
 """``session``'s `file:` filesystem: NioLocalFileSystem keeps the modes,
 sticky bit, checksum twins and no-overwrite rename of the filesystem it
-replaces, and its class is compiled once per source text into the user
-cache (or skipped, with a warning, when the host has no javac)."""
+replaces, and its class is compiled once per source text and Spark version
+into the user cache (or skipped, with a warning, when the host has no
+javac)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,8 @@ import logging
 import os
 import stat
 import subprocess
+
+import pyspark
 
 from spark_streaming_twitch_analytics_spark import session
 
@@ -59,8 +62,9 @@ def test_nio_local_fs_keeps_modes_sticky_bit_and_crc_twins(spark, tmp_path):
 
 def test_nio_fs_build_is_cached_per_source_text(tmp_path, monkeypatch, caplog):
     """First build runs javac, the second reuses the directory, a changed
-    source gets its own key, a failed build leaves nothing behind, and
-    with no javac on PATH the conf additions are empty."""
+    source or Spark version gets its own key, a failed build leaves
+    nothing behind, and with no javac on PATH the conf additions are
+    empty."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     javac_runs = []
     real_run = subprocess.run
@@ -85,16 +89,26 @@ def test_nio_fs_build_is_cached_per_source_text(tmp_path, monkeypatch, caplog):
     assert len(javac_runs) == 2
     assert second != first and os.path.isdir(second)
 
+    # a Spark upgrade brings other jars to compile against: same source,
+    # new directory; back on the old version the old build is reused
+    with monkeypatch.context() as m:
+        m.setattr(pyspark, "__version__", pyspark.__version__ + ".next")
+        upgraded = session.nio_fs_classes()
+    assert len(javac_runs) == 3
+    assert upgraded not in (first, second) and os.path.isdir(upgraded)
+    assert session.nio_fs_classes() == first
+    assert len(javac_runs) == 3
+
     broken = tmp_path / "v3" / "NioLocalFileSystem.java"
     broken.parent.mkdir()
     broken.write_text("package graft; class {")
     with caplog.at_level(logging.WARNING, logger=session.__name__):
         assert session.nio_fs_classes(broken) is None
-    assert len(javac_runs) == 3
+    assert len(javac_runs) == 4
     assert len(caplog.records) == 1
     cache = tmp_path / "cache" / "spark_streaming_twitch_analytics_spark"
     assert sorted(os.listdir(cache)) == sorted(
-        os.path.basename(d) for d in (first, second)
+        os.path.basename(d) for d in (first, second, upgraded)
     )  # no staging directory left behind
 
     assert session.nio_fs_conf("local[2]") == {
@@ -109,5 +123,5 @@ def test_nio_fs_build_is_cached_per_source_text(tmp_path, monkeypatch, caplog):
     with caplog.at_level(logging.WARNING, logger=session.__name__):
         assert session.nio_fs_classes() is None
         assert session.nio_fs_conf("local[2]") == {}
-    assert len(javac_runs) == 3
+    assert len(javac_runs) == 4
     assert [r.levelno for r in caplog.records] == [logging.WARNING] * 2

@@ -445,8 +445,8 @@ def test_state_scale_probe_runs_both_providers(spark, tmp_path):
 
 def test_stream_probe_reports_phase_medians_per_run(spark):
     """measure_stream_throughput keeps, per run, the median of each
-    recentProgress durationMs phase and of the state commit time, so a
-    bench summary shows which trigger layer moved."""
+    recentProgress durationMs phase, of the state commit time and of the
+    state memory, so a bench summary shows which trigger layer moved."""
     from conftest import SF_SMALL
 
     from spark_streaming_twitch_analytics_spark.streaming.probe import (
@@ -457,9 +457,11 @@ def test_stream_probe_reports_phase_medians_per_run(spark):
     r = measure_stream_throughput(spark, SF_SMALL, replicate=2, n_files=2, runs=2)
     assert len(r["phase_ms_runs"]) == 2
     for run in r["phase_ms_runs"]:
-        assert set(run) == {*PHASES, "stateCommit"}
+        assert set(run) == {*PHASES, "stateCommit", "stateMemoryBytes"}
         assert all(isinstance(v, int) and v >= 0 for v in run.values()), run
         assert run["addBatch"] > 0
+        # the state holds every distinct word seen, so it takes memory
+        assert run["stateMemoryBytes"] > 0
 
 
 CKPT_MANAGER = (
@@ -483,6 +485,30 @@ def _drain_two_batches(spark, tmp_path) -> str:
     finally:
         q.stop()
     return chk
+
+
+def test_snapshot_version_is_one_part_file(spark, tmp_path):
+    """The snapshot sink writes each version from one task: after a
+    two-trigger drain at 4 shuffle partitions the state store still has
+    4 partitions, the current version directory holds exactly one part
+    file, and that table is the batch count of both batches."""
+    import os
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4")  # fixed in the checkpoint at the first trigger
+    try:
+        chk = _drain_two_batches(spark, tmp_path)
+    finally:
+        spark.conf.set(key, before)
+    state = os.listdir(os.path.join(chk, "state", "0"))
+    assert sorted(d for d in state if d.isdigit()) == ["0", "1", "2", "3"]
+    store = KVTableStore(spark, str(tmp_path / "store"))
+    version = os.path.join(store._table_root("wc"), store._load_meta("wc")["version"])
+    parts = [n for n in os.listdir(version) if n.startswith("part-")]
+    assert len(parts) == 1 and parts[0].endswith(".parquet"), sorted(os.listdir(version))
+    got = counts_of(store.get_table("wc", SW.COUNT_SCHEMA))
+    assert got == counts_of(SW.batch_oracle_word_counts(spark, B1 + B2))
 
 
 def test_flagship_drain_forks_no_chmod_or_readlink(spark, tmp_path):
