@@ -15,7 +15,7 @@ row per element, aggregate to a scalar, or encode to a string (hex /
 ``concat_ws``) — each keeps an exact oracle expressible in ANSI SQL.
 
 Used by ``tests/test_contract.py`` (lazy schema lint over all batch
-queries) and ``tools/local_oracle_sweep.py`` (the executed sweep, which
+queries) and ``tools/compare_oracle.py`` (the executed oracle run, which
 also covers the ``streaming_*`` queries).
 """
 

@@ -2859,6 +2859,25 @@ def streaming_category_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_final_word_counts(spark: SparkSession, sf_dir: str, op) -> DataFrame:
+    """(word, cnt) final state of the documents stream's countable words
+    under the keyed running-count operator ``op`` (``running_count_*`` of
+    ``streaming.stateful``), run in update mode without idle expiry."""
+    from .functions.text import countable_words
+    from .operators.messages import format_raw_messages
+
+    def build(raw: DataFrame) -> DataFrame:
+        words = format_raw_messages(raw).select(
+            F.explode(countable_words(F.col("text"), DEFAULT_LANG)).alias("word")
+        )
+        return op(words, idle_timeout_ms=None)
+
+    updates = _run_stream_over_docs(spark, sf_dir, build, mode="update")
+    # update-mode sink logs every per-batch revision; the final state per
+    # key is the max running count
+    return updates.groupBy("word").agg(F.max("cnt").alias("cnt"))
+
+
 @register(
     "streaming_stateful_wordcount",
     _STREAM_WC_SQL,
@@ -2866,20 +2885,9 @@ def streaming_category_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts via custom per-key state; final state ≡ batch counts",
 )
 def streaming_stateful_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.text import countable_words
-    from .operators.messages import format_raw_messages
     from .streaming.stateful import running_count_with_expiry
 
-    def build(raw: DataFrame) -> DataFrame:
-        words = format_raw_messages(raw).select(
-            F.explode(countable_words(F.col("text"), DEFAULT_LANG)).alias("word")
-        )
-        return running_count_with_expiry(words, idle_timeout_ms=None)
-
-    updates = _run_stream_over_docs(spark, sf_dir, build, mode="update")
-    # update-mode sink logs every per-batch revision; the final state per
-    # key is the max running count
-    return updates.groupBy("word").agg(F.max("cnt").alias("cnt"))
+    return _stream_final_word_counts(spark, sf_dir, running_count_with_expiry)
 
 
 _STREAM_HH_PHI_INV = 500  # stream heavy hitter ⇔ freq ≥ N/500 (φ = 0.2%)
@@ -2903,25 +2911,17 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     in keyed state; the threshold cut reads the state snapshot. Keyed
     state shards across executors (state size = vocabulary of the
     stream; production bounds it with state TTL — the idle_timeout seam
-    below — or swaps in per-partition MG summaries when even the hot
-    vocabulary is too large, as corpus_heavy_hitters does for batch)."""
-    from .functions.text import countable_words
-    from .operators.messages import format_raw_messages
+    of the running count — or swaps in per-partition MG summaries when
+    even the hot vocabulary is too large, as corpus_heavy_hitters does
+    for batch)."""
     from .streaming.stateful import running_count_with_expiry
 
-    def build(raw: DataFrame) -> DataFrame:
-        words = format_raw_messages(raw).select(
-            F.explode(countable_words(F.col("text"), DEFAULT_LANG)).alias("word")
-        )
-        return running_count_with_expiry(words, idle_timeout_ms=None)
-
-    updates = _run_stream_over_docs(spark, sf_dir, build, mode="update")
-    final = updates.groupBy("word").agg(F.max("cnt").alias("freq"))
-    total = final.agg(F.sum("freq").alias("n"))
+    final = _stream_final_word_counts(spark, sf_dir, running_count_with_expiry)
+    total = final.agg(F.sum("cnt").alias("n"))
     return (
         final.crossJoin(F.broadcast(total))
-        .filter(F.col("freq") * _STREAM_HH_PHI_INV >= F.col("n"))
-        .select("word", "freq")
+        .filter(F.col("cnt") * _STREAM_HH_PHI_INV >= F.col("n"))
+        .select("word", F.col("cnt").alias("freq"))
     )
 
 
@@ -2950,18 +2950,7 @@ def _has_tws_runtime() -> bool:
     "why the batch word-count SQL is a valid hash oracle for BOTH paths.",
 )
 def streaming_tws_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.text import countable_words
-    from .operators.messages import format_raw_messages
     from .streaming.stateful import running_count_tws, running_count_with_expiry
-
-    def build_with(op):
-        def build(raw: DataFrame) -> DataFrame:
-            words = format_raw_messages(raw).select(
-                F.explode(countable_words(F.col("text"), DEFAULT_LANG)).alias("word")
-            )
-            return op(words, idle_timeout_ms=None)
-
-        return build
 
     def run_tws() -> DataFrame:
         conf_key = "spark.sql.streaming.stateStore.providerClass"
@@ -2972,9 +2961,7 @@ def streaming_tws_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
             "RocksDBStateStoreProvider",
         )
         try:
-            return _run_stream_over_docs(
-                spark, sf_dir, build_with(running_count_tws), mode="update"
-            )
+            return _stream_final_word_counts(spark, sf_dir, running_count_tws)
         finally:
             if prev:
                 spark.conf.set(conf_key, prev)
@@ -2982,7 +2969,7 @@ def streaming_tws_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.unset(conf_key)
 
     path = "apiws-fallback:no-protobuf"
-    updates = None
+    counts = None
     if _has_tws_runtime():
         # the TWS state-server needs runtime pieces this container can't
         # exercise (protobuf + RocksDB JNI); if the environment has
@@ -2990,20 +2977,18 @@ def streaming_tws_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         # path column and certify the semantics via the apiws twin
         # rather than erroring the whole row
         try:
-            updates = run_tws()
+            counts = run_tws()
             path = "tws"
         except Exception as e:  # env-specific TWS failure, not semantics
             path = f"apiws-fallback:tws-error:{type(e).__name__}"
-    if updates is None:
-        updates = _run_stream_over_docs(
-            spark, sf_dir, build_with(running_count_with_expiry), mode="update"
-        )
+    if counts is None:
+        counts = _stream_final_word_counts(spark, sf_dir, running_count_with_expiry)
     # the engine path is diagnostics, not data: stderr keeps the hashed
     # output runtime-independent so the batch oracle applies to both paths
     import sys
 
     print(f"# streaming_tws_wordcount path={path}", file=sys.stderr)
-    return updates.groupBy("word").agg(F.max("cnt").alias("cnt"))
+    return counts
 
 
 def _run_stream_over_events(

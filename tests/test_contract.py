@@ -15,8 +15,8 @@ atomic at the top level (arrays are fine INSIDE a plan — explode,
 aggregate, or hex-encode them before the final select).
 
 Streaming queries (``streaming_*``) run real micro-batch jobs, so their
-schemas can't be read lazily here; they're linted by the same assertion
-in ``tools/local_oracle_sweep.py``, which executes them every round.
+schemas can't be read lazily here; they're linted by the same check in
+``tools/compare_oracle.py``, which executes them (status ``contract-error``).
 """
 
 from __future__ import annotations

@@ -12,15 +12,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 import random
-import sys
 
-import duckdb
 import pytest
 
-sys.path.append(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-from compare_oracle import frame_hash  # noqa: E402
-
-from spark_streaming_twitch_analytics_spark import registry  # noqa: E402
+from spark_streaming_twitch_analytics_spark import registry
+from tools.compare_oracle import PASSING, check, connect
 
 VOCAB = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima "
@@ -230,31 +226,12 @@ def _link_star_schema(root: str) -> None:
 
 
 def _run_gate(spark, sf_dir: str, queries=None) -> None:
-    con = duckdb.connect()
-    from spark_streaming_twitch_analytics_spark.tables import TABLE_NAMES
-
-    for t in TABLE_NAMES:
-        p = f"{sf_dir}/{t}.parquet"
-        src = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-    from spark_streaming_twitch_analytics_spark.cache import release_all
-
-    failures = []
-    for name in queries if queries is not None else FUZZ_QUERIES:
-        q = registry.get(name)
-        release_all()
-        sdf = q.fn(spark, sf_dir)
-        srows = [tuple(r) for r in sdf.collect()]
-        sh, sn = frame_hash(sdf.columns, srows)
-        if q.sql is None:
-            assert sn >= 0
-            continue
-        res = con.execute(q.sql)
-        dcols = [d[0] for d in res.description]
-        drows = res.fetchall()
-        dh, dn = frame_hash(dcols, drows)
-        if not (sorted(sdf.columns) == sorted(dcols) and sh == dh and sn == dn):
-            failures.append((name, sn, dn, sh, dh))
+    con = connect(sf_dir)
+    recs = {
+        name: check(spark, con, registry.get(name), sf_dir)
+        for name in (queries if queries is not None else FUZZ_QUERIES)
+    }
+    failures = {n: r for n, r in recs.items() if r["status"] not in PASSING}
     assert not failures, failures
 
 
@@ -304,6 +281,22 @@ def pathological_dir(spark, tmp_path_factory):
 @pytest.mark.slow  # builder-side per-round ritual (see pytest.ini)
 def test_registry_queries_match_oracle_on_pathological_tables(spark, pathological_dir):
     _run_gate(spark, pathological_dir)
+
+
+# Default-suite smoke twin of the two slow sweeps: a fixed handful of
+# FUZZ_QUERIES on the fixed-seed pathological tables, one per family the
+# sweeps stress hardest (stream state, dedup, ANN) plus the flagship.
+SMOKE_QUERIES = [
+    "flagship_wordcount",
+    "streaming_heavy_hitters",
+    "dedup_minhash_pairs",
+    "ann_ivf_topk",
+]
+
+
+def test_fuzz_smoke_queries_match_oracle_on_pathological_tables(spark, pathological_dir):
+    assert set(SMOKE_QUERIES) <= set(FUZZ_QUERIES)
+    _run_gate(spark, pathological_dir, SMOKE_QUERIES)
 
 
 # ---------------------------------------------------------------------------
