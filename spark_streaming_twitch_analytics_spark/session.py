@@ -7,6 +7,12 @@ re-planning, skew-join splitting, partition coalescing), Arrow for any
 pandas exchange, and a UTC session timezone so results compare bit-for-bit
 against the DuckDB oracle.
 
+Two constants cut the fixed cost a session pays for every query it
+re-runs: the generated-class cache holds a working set of queries, so a
+repeated query compiles no Java again, and PySpark's DataFrame call-site
+capture is off, so a Column call is one Py4J round trip instead of about
+five (error messages no longer carry the Python call site).
+
 On a real cluster the same factory applies -- only ``master`` and the
 shuffle-partition count change (rule of thumb: 2-3x total executor cores,
 and AQE coalesces the excess at runtime).
@@ -90,6 +96,14 @@ def nio_fs_conf(master: str) -> dict[str, str]:
     }
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM``, else 16g or
+    half the host's physical memory, whichever is less, so that two
+    sessions (the test suite next to an oracle sweep) fit on one host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(16 << 10, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "spark_streaming_twitch_analytics_spark",
     master: str | None = None,
@@ -113,7 +127,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         # sized for local mode; on a cluster this becomes executor memory
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime partition coalescing + skew-join handling (the scale
         # story for the skewed keys a 100 TB corpus will have)
@@ -155,6 +169,28 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Generated classes stay compiled across queries. Spark keeps them
+        # in a Guava cache of maximumSize(maxEntries) split into 4
+        # segments that each evict on their own, so the default 100 holds
+        # about 25 classes a segment. The 7 queries of perfbench's
+        # batch_mix need 87 classes: at 100 each steady-state pass ran
+        # 21-24 Janino compiles (~300 ms of its ~3.3 s CPU), at 1,000 none.
+        # One pass of all 249 registry queries at sf0.001 compiles 2,770
+        # classes; a second pass recompiles 4,036 of them at 100, 2,704 at
+        # 1,000 (a cycle longer than an LRU evicts everything) and 80 with
+        # no bound, for 21 MB more metaspace than at 100. 4,096 holds that
+        # set with room for the segments' uneven split.
+        # Static: a JVM already up keeps the cache it was built with.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # No Python call-site capture: PySpark wraps every Column and
+        # functions.* call to send its frame to PySparkCurrentOrigin,
+        # about 5 Py4J round trips a call (and on the JVM, reflective
+        # lookups that scan every jar's index). Off, a warm build of the 7
+        # batch_mix queries sends 1,422 instead of 2,562 Py4J commands.
+        # PySpark reads the switch once per process, at the first wrapped
+        # call, so it is set here rather than on a running session.
+        # Analysis errors still name the column, without the Python line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
     # `file:` goes through NioLocalFileSystem: a LocalFileSystem that sets

@@ -2,7 +2,9 @@
 sticky bit, checksum twins and no-overwrite rename of the filesystem it
 replaces, and its class is compiled once per source text and Spark version
 into the user cache (or skipped, with a warning, when the host has no
-javac)."""
+javac). The per-query constants: a repeated working set of queries
+compiles no generated class twice, building a query captures no Python
+call site, and the default driver heap leaves room for a second JVM."""
 
 from __future__ import annotations
 
@@ -12,8 +14,17 @@ import stat
 import subprocess
 
 import pyspark
+import pyspark.errors.utils
+from conftest import SF_SMALL
 
-from spark_streaming_twitch_analytics_spark import session
+from spark_streaming_twitch_analytics_spark import registry, session
+from spark_streaming_twitch_analytics_spark.cache import release_all
+
+# perfbench's batch_mix: one session re-running these registry queries
+BATCH_MIX = (
+    "flagship_wordcount", "update_table_merge", "threshold_decode", "training_prep",
+    "q1_pricing_summary", "q18_large_orders", "sessionize",
+)
 
 
 def _mode(path) -> int:
@@ -125,3 +136,76 @@ def test_nio_fs_build_is_cached_per_source_text(tmp_path, monkeypatch, caplog):
         assert session.nio_fs_conf("local[2]") == {}
     assert len(javac_runs) == 4
     assert [r.levelno for r in caplog.records] == [logging.WARNING] * 2
+
+
+def test_codegen_cache_holds_a_repeated_working_set(spark):
+    """A cycle of more generated classes than Spark's default cache of 100
+    holds (about 25 per Guava segment): 120 distinct projections plus the
+    batch_mix queries. Run twice, the second cycle compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def cycle() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for i in range(120):
+            # the driver compiles a whole-stage class when the plan's RDD is
+            # made, so no job is needed to use the cache
+            plan = spark.range(8).selectExpr(f"id * {i} + {i} AS v")._jdf.queryExecution()
+            plan.executedPlan().execute()
+        for name in BATCH_MIX:
+            release_all()
+            registry.get(name).fn(spark, SF_SMALL).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        release_all()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert cycle() > 100  # more classes than the default cache holds
+    assert cycle() == 0
+
+
+def test_building_a_query_captures_no_call_site(spark):
+    """PySpark's DataFrame call-site capture is off for the process: the
+    flagship builds without PySparkCurrentOrigin lookups, in about half
+    the Py4J round trips it takes with the capture on (572)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert pyspark.errors.utils.is_debugging_enabled() is False
+    assert pyspark.errors.utils._enable_debugging_cache is False
+
+    build = registry.get("flagship_wordcount").fn
+    build(spark, SF_SMALL)  # the table's schema is inferred on first open
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    commands = []
+
+    def recording(command, *args, **kwargs):
+        commands.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = recording
+    try:
+        build(spark, SF_SMALL)
+    finally:
+        del client.send_command  # back to the class's method
+    assert not [c for c in commands if "PySparkCurrentOrigin" in c]
+    # leave out Py4J's deletes of garbage-collected proxies: when they are
+    # sent depends on the collector, not on the build
+    calls = [c for c in commands if not c.startswith("m\nd\n")]
+    assert 0 < len(calls) <= 350, len(calls)  # 272 with PySpark 4.1.2
+
+
+def test_driver_memory_defaults_to_half_the_host_up_to_16g(monkeypatch):
+    def host(gib: int):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib << 18}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    host(16)
+    assert session.driver_memory() == "8192m"
+    host(15)
+    assert session.driver_memory() == "7680m"
+    host(32)
+    assert session.driver_memory() == "16384m"
+    host(256)
+    assert session.driver_memory() == "16384m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session.driver_memory() == "2g"
